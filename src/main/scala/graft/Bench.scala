@@ -56,7 +56,8 @@ import org.apache.spark.sql.SparkSession
   * benched as q291 and chain discovery is manifest TSV reads; q307's
   * card ingest cycle pays a cold card build + a batch merge over its
   * own replica per call by construction — the warm serve is benched
-  * as q306 and the marginal merge is the CardProbe measurement;
+  * as q306 and the marginal merge is measured in SCALE.md's round-17
+  * "Incremental card" section;
   * q308's drift report pays TWO as-of card builds over an own-replica
   * chronology per call — the q305 rationale; the drift verb itself is
   * card-artifact reads in q306's serve class; q310's age-retained
@@ -245,6 +246,7 @@ object Bench {
     // the same query under SQL-conf overrides (how every graft
     // optimization knob is expressed);
     //   SPARK_GRAFT_BENCH_AB="qname;conf:key=v[,key=v];reps:N"
+    // e.g. "q282_postings_append_cycle;conf:spark.graft.write.sized=false;reps:4"
     // runs warm-up + N alternating A/B pairs and prints ONE JSON line
     // with both series and medians, then exits (no full suite).
     sys.env.get("SPARK_GRAFT_BENCH_AB").foreach { spec =>

@@ -71,14 +71,10 @@ object Dedup {
     * own exchange, but map-side partial aggregation combines first, so
     * what crosses is per-doc-combined rows instead of every raw token.
     * Consumers read pos only for per-doc ordering (winnowing's ROWS
-    * frame), which the row-local form preserves exactly.
-    * Escape hatch `spark.graft.shingles.local=false` restores the
-    * window spelling (bit-identical output; ShingleLocalSpec pins it).
+    * frame), which the row-local form preserves exactly
+    * (ShingleLocalSpec pins it against the window spelling).
     */
   def positionalShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val local = df.sparkSession.conf
-      .getOption("spark.graft.shingles.local").forall(_.toBoolean)
-    if (!local) return positionalShinglesWindow(df, idCol, textCol, n)
     // normalize() trims and collapses separator runs, so split yields
     // an empty token ONLY for fully-empty text — array_remove (codegen,
     // unlike the filter() lambda) drops that case and cannot perturb
@@ -90,25 +86,6 @@ object Dedup {
       .select(col("id"), col("pos"),
         concat_ws(" ", (col("w") +: (1 until n).map(i =>
           element_at(col("toks"), col("pos") + lit(i + 1)))): _*).as("shingle"))
-  }
-
-  /** The round-15-and-earlier window-`lead` spelling of
-    * [[positionalShingles]] — kept verbatim as the A/B escape hatch
-    * (`spark.graft.shingles.local=false`).
-    */
-  private[graft] def positionalShinglesWindow(df: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame = {
-    val toks = df.select(col(idCol).as("id"),
-        posexplode(split(TextPrep.normalize(col(textCol)), " ")).as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-    val wnd = Window.partitionBy(col("id")).orderBy(col("pos"))
-    val withLeads = (1 until n).foldLeft(toks) { (acc, i) =>
-      acc.withColumn(s"w$i", lead(col("w"), i).over(wnd))
-    }
-    val parts = col("w") +: (1 until n).map(i => col(s"w$i"))
-    withLeads
-      .filter((1 until n).map(i => col(s"w$i").isNotNull).reduceOption(_ && _).getOrElse(lit(true)))
-      .select(col("id"), col("pos"), concat_ws(" ", parts: _*).as("shingle"))
   }
 
   /** (id, shingle) pairs, distinct per doc. */

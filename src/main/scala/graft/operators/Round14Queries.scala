@@ -175,25 +175,15 @@ object Round14Queries {
   def q227Rouge2(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), TextPrep.tokensCol(col("text")).as("toks"))
-    // size<2 guard: Spark's sequence(0, n) DESCENDS for n<0, and ANSI
-    // mode turns the resulting negative toks[i] into a hard error.
     // Row-local CODEGEN bigrams (posexplode + element_at — the q140/
-    // positionalShingles form): the transform(sequence(...)) lambda is
-    // CodegenFallback, evaluating the gram build interpreted per
-    // element; the hatch restores it (bit-identical output).
-    val ngramLocal = s.conf
-      .getOption("spark.graft.ngram.local").forall(_.toBoolean)
-    val bigramRows = if (ngramLocal) docs
+    // positionalShingles form): no transform lambda, which would be
+    // CodegenFallback and build each gram interpreted per element.
+    val bigramRows = docs
       .select(col("doc_id"), col("toks"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
       .filter(col("pos") + 2 <= size(col("toks")))
       .select(col("doc_id"), concat(col("tok"), lit(" "),
         element_at(col("toks"), col("pos") + 2)).as("bigram"))
-    else docs.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"),
-        explode(expr(
-          "transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i + 1]))"))
-          .as("bigram"))
     val bigrams = bigramRows
       .groupBy(col("doc_id"), col("bigram"))
       .agg(count(lit(1)).as("c"))

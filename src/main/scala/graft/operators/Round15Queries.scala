@@ -208,29 +208,19 @@ object Round15Queries {
   private[operators] def scoreComponentsAtGrid(comp: DataFrame,
       points: Seq[(Long, Long)]): DataFrame = {
     require(points.nonEmpty, "scoreComponentsAtGrid: empty grid")
-    // grid exploded FIRST (a Generate over a literal array — same
-    // cardinality and order as the old transform-then-explode), then
-    // ONE codegen'd Okapi fold per (pair, grid point): the old
-    // aggregate()/transform() higher-order spelling is CodegenFallback
-    // — interpreted lambda evaluation per element, measured at
-    // ~58 µs/row on the q281 serve stage. Bm25OkapiFold runs the
-    // bit-identical arithmetic (same sorted-array order, same double
-    // association) as a primitive loop inside whole-stage codegen;
-    // Round15QueriesSpec pins fold ≡ groupBy-formula equality.
+    // ONE codegen'd Okapi fold per (pair, grid point): an aggregate()
+    // higher-order spelling is CodegenFallback — interpreted lambda
+    // evaluation per element, measured at ~58 µs/row on the q281 serve
+    // stage. Bm25OkapiFold runs the same arithmetic (sorted-array
+    // order, double association) as a primitive loop inside
+    // whole-stage codegen; Round15QueriesSpec pins fold ≡
+    // groupBy-formula equality and CodegenFoldSpec pins it against the
+    // interpreted fold.
     graft.functions.Bm25Functions.register(comp.sparkSession)
     graft.functions.Bm25Functions.registerGrid(comp.sparkSession)
     val gridArr = array(points.map { case (k1m, bm) =>
       struct(lit(k1m).as("k1_micro"), lit(bm).as("b_micro")) }: _*)
-    // A/B escape hatch (measurement honesty: the bench's interleaved
-    // A/B mode flips SQL confs in one JVM): `false` restores the
-    // interpreted higher-order fold. Both spellings are bit-identical.
-    val codegenFold = comp.sparkSession.conf
-      .getOption("spark.graft.bm25.codegenFold").forall(_.toBoolean)
-    // second hatch for the grid-vectorized fold alone (A/B: gridFold
-    // false + codegenFold true = the round-15 per-point codegen fold)
-    val gridFold = comp.sparkSession.conf
-      .getOption("spark.graft.bm25.gridFold").forall(_.toBoolean)
-    if (codegenFold && gridFold && points.size > 1) {
+    if (points.size > 1) {
       // multi-point sweep: ONE grid-vectorized fold per pair — the
       // dial-independent idf log is computed once per term instead of
       // |grid|× (guide §2.3 "don't recompute what you throw away");
@@ -241,7 +231,7 @@ object Round15Queries {
       // cardinality and row order match explode(gridArr) exactly.
       val k1Arr = array(points.map(p => lit(p._1)): _*)
       val bArr = array(points.map(p => lit(p._2)): _*)
-      return comp
+      comp
         .select(col("query_id"), col("doc_id"),
           size(col("terms")).cast("long").as("n_terms_hit"),
           graft.functions.Bm25Functions.foldGrid(col("terms"), col("dl"),
@@ -253,24 +243,7 @@ object Round15Queries {
           col("query_id"), col("doc_id"),
           round(element_at(col("scores"), col("gp") + 1), 6).as("bm25"),
           col("n_terms_hit"))
-    }
-    def foldAt(k1m: org.apache.spark.sql.Column,
-        bm: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (codegenFold)
-        graft.functions.Bm25Functions.fold(col("terms"), col("dl"),
-          col("n_docs"), col("avgdl"), k1m, bm)
-      else {
-        val k1 = k1m / lit(1e6)
-        val b = bm / lit(1e6)
-        aggregate(col("terms"), lit(0.0), (acc, t) =>
-          acc + log(lit(1.0) +
-              (col("n_docs") - t.getField("df") + lit(0.5)) /
-              (t.getField("df") + lit(0.5))) *
-            (t.getField("tf") * (k1 + lit(1.0))) /
-            (t.getField("tf") + k1 *
-              (lit(1.0) - b + b * col("dl") / col("avgdl"))))
-      }
-    comp
+    } else comp
       .select(col("query_id"), col("doc_id"),
         size(col("terms")).cast("long").as("n_terms_hit"),
         col("terms"), col("dl"), col("n_docs"), col("avgdl"),
@@ -278,7 +251,9 @@ object Round15Queries {
       .select(col("g.k1_micro").as("k1_micro"),
         col("g.b_micro").as("b_micro"),
         col("query_id"), col("doc_id"),
-        round(foldAt(col("g.k1_micro"), col("g.b_micro")), 6).as("bm25"),
+        round(graft.functions.Bm25Functions.fold(col("terms"), col("dl"),
+          col("n_docs"), col("avgdl"), col("g.k1_micro"), col("g.b_micro")), 6)
+          .as("bm25"),
         col("n_terms_hit"))
   }
 
@@ -1020,7 +995,8 @@ object Round15Queries {
 
   // ------------------------------------------ bucket-dial auto-choice
   /** The bucket ladder's sizing target: expected DISTINCT TERMS per
-    * postings/df bucket. From the Bm25BucketProbe curve (SCALE.md):
+    * postings/df bucket. From the bucket-count curve (SCALE.md, round-17
+    * "Bucket-count dial measured honestly"):
     * prune fraction follows vocab/buckets exactly per the hash model
     * while per-bucket file count adds a flat open cost — so the dial
     * should grow with the VOCABULARY, not the corpus rows, and the

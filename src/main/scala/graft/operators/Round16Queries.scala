@@ -314,32 +314,21 @@ object Round16Queries {
     * to the single round-6 ratio; the leave-one-out clip C − c_d
     * falls out of the join algebraically (no per-doc corpus rebuild —
     * THE trick that makes corpus-level self-BLEU one gram-keyed join
-    * instead of n corpus passes). Shape: doc-keyed bigram window →
+    * instead of n corpus passes). Shape: row-local bigrams →
     * gram-keyed count join → doc rollup; every exchange keyed and
     * linear, the q257 profile.
     */
   def q261SelfBleu(s: SparkSession, dir: String): DataFrame = {
-    val local = s.conf.getOption("spark.graft.ngram.local").forall(_.toBoolean)
     // row-local bigrams (the q140/positionalShingles rationale, guide
     // §2.4): nxt is an element_at probe into the SAME row's token
-    // array — codegen, no corpus-token exchange + sort; the hatch
-    // restores the lead-window spelling (bit-identical output)
-    val bi = if (local) Tables.documents(s, dir)
+    // array — codegen, no corpus-token exchange + sort
+    val bi = Tables.documents(s, dir)
       .select(col("doc_id"), TextPrep.tokensCol(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
       .filter(col("pos") + 2 <= size(col("toks")))
       .select(col("doc_id"), concat_ws(" ", col("tok"),
         element_at(col("toks"), col("pos") + 2)).as("gram"))
-    else {
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          posexplode(TextPrep.tokensCol(col("text"))).as(Seq("pos", "tok")))
-        .withColumn("nxt", lead(col("tok"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .select(col("doc_id"), concat_ws(" ", col("tok"), col("nxt")).as("gram"))
-    }
     val perDoc = bi.groupBy(col("doc_id"), col("gram"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint() // shared: corpus totals + the clip join

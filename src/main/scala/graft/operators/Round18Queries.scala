@@ -1223,7 +1223,7 @@ object Round18Queries {
     * size `nBuckets`. The pure ladder rule
     * [[Round15Queries.chooseBucketCount]] (smallest power-of-two with
     * expected terms-per-bucket ≤ [[Round15Queries.BucketTermsTarget]],
-    * clamped — the shape the Bm25BucketProbe curve measured: pruning
+    * clamped — the shape SCALE.md's round-17 bucket-count curve measured: pruning
     * follows vocab/buckets per the hash model, file-open cost adds a
     * flat per-bucket term) picks the count from the build's OWN tf
     * pass (one distinct-count over the already-checkpointed tf table —

@@ -184,23 +184,21 @@ object Round7Queries {
     * from q42's unigram LM (fluency, not just vocabulary: word-ORDER
     * anomalies now lower the score). Train and score in one job:
     *
-    *   - tokens via posexplode; bigrams via one `lead` window per doc
-    *     (single doc_id exchange — same shape as q61's winnowing);
+    *   - bigrams formed row-locally (posexplode + element_at over each
+    *     doc's token array — no per-doc window, no doc_id exchange);
     *   - unigram counts (vocab-bounded) and the vocab size V broadcast
-    *     back; the bigram-count join is the only corpus-sized keyed
-    *     exchange beyond tokenization;
+    *     back; the (source, w1, w2) count is the only corpus-sized
+    *     keyed exchange;
     *   - per-bigram log-probability ln((c2+k)/(cu+k·V)), k=0.5,
     *     quantized to nano-unit longs before the per-source sum — every
     *     aggregate integer-exact (the q98/q113 ln rule again).
     *
     * At 100 TB the model tables stay dictionary-sized while the corpus
-    * is touched by exactly one tokenize + one window + one count join.
+    * is touched by exactly one tokenize + one grouped count.
     */
   val BigramK = 0.5
 
   def q140BigramLm(s: SparkSession, dir: String): DataFrame = {
-    val local = s.conf.getOption("spark.graft.ngram.local").forall(_.toBoolean)
-    if (!local) return q140BigramLmWindow(s, dir)
     // Row-local bigrams (guide §2.4): adjacent tokens come from the
     // SAME row's array, so the per-doc lead window — a full
     // corpus-token exchange + sort — bought nothing; posexplode anchors
@@ -235,32 +233,6 @@ object Round7Queries {
       .groupBy(col("source"))
       .agg(sum(col("cs")).as("n_bigrams"),
         sum(col("cs") * col("t")).as("sum_logprob_nano"))
-      .orderBy(col("source"))
-  }
-
-  /** The pre-round-16 spelling of [[q140BigramLm]] — per-doc lead
-    * window + corpus-bigram⋈counts join; kept verbatim as the A/B
-    * escape hatch (`spark.graft.ngram.local=false`). */
-  private def q140BigramLmWindow(s: SparkSession, dir: String): DataFrame = {
-    val tok = Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-    val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-    val vsize = uni.agg(count(lit(1)).as("vsize"))
-    val big = tok
-      .withColumn("w2",
-        lead(col("w"), 1).over(
-          Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), col("source"), col("w").as("w1"), col("w2"))
-    val cb = big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-    big.join(cb, Seq("w1", "w2"))
-      .join(broadcast(uni.withColumnRenamed("w", "w1")), Seq("w1"))
-      .crossJoin(broadcast(vsize))
-      .withColumn("t",
-        expr(s"cast(round(1e9 * ln((c2 + $BigramK) / (cu + $BigramK * vsize))) as bigint)"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("t")).as("sum_logprob_nano"))
       .orderBy(col("source"))
   }
 
@@ -685,9 +657,9 @@ object Round7Queries {
     * support-filtered at c2 >= 5, quantized to nano longs, ranked with
     * a full deterministic tie-break (pmi desc, w1, w2). Every table in
     * the rank stage is vocabulary-bounded; the corpus is touched by one
-    * tokenize + one lead window + the two count aggregates. The global
-    * top-k runs on the vocab²-bounded pair table (TakeOrdered, no
-    * corpus sort).
+    * tokenize + the two count aggregates (bigrams formed row-locally).
+    * The global top-k runs on the vocab²-bounded pair table
+    * (TakeOrdered, no corpus sort).
     */
   val PmiMinSupport = 5
   val PmiTopK = 20
@@ -700,40 +672,20 @@ object Round7Queries {
     // t = Σcu over the unigram table, b = Σc2 over the UNFILTERED pair
     // table — identical sums, two fewer corpus passes (§1.2 step 1).
     // cb0 is vocab²-bounded; localCheckpoint so the support filter and
-    // the b total share one evaluation.
-    val local = s.conf.getOption("spark.graft.ngram.local").forall(_.toBoolean)
-    val tok = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-    val big =
-      if (local) Tables.documents(s, dir)
-        .select(split(col("text"), " ").as("toks"))
-        .select(col("toks"), posexplode(col("toks")).as(Seq("pos", "w1")))
-        .filter(col("pos") + 2 <= size(col("toks")))
-        .select(col("w1"), element_at(col("toks"), col("pos") + 2).as("w2"))
-      else tok
-        .withColumn("w2", lead(col("w"), 1).over(
-          Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
-        .filter(col("w2").isNotNull)
-        .select(col("w").as("w1"), col("w2"))
-    val (uni, tt, bt, cb) = if (local) {
-      // uni checkpointed: the t total and the two broadcast slices
-      // share one tokenize; cb0 checkpointed: the b total and the
-      // support filter share one pair aggregation (both model-sized)
-      val u = tok.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-        .localCheckpoint()
-      val cb0 = big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-        .localCheckpoint()
-      (u, u.agg(sum(col("cu")).as("t")),
-        cb0.agg(sum(col("c2")).as("b")),
-        cb0.filter(col("c2") >= PmiMinSupport))
-    } else {
-      (tok.groupBy(col("w")).agg(count(lit(1)).as("cu")),
-        tok.agg(count(lit(1)).as("t")),
-        big.agg(count(lit(1)).as("b")),
-        big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-          .filter(col("c2") >= PmiMinSupport))
-    }
+    // the b total share one evaluation. uni stays a plain aggregate so
+    // both broadcast sides show their vocabulary bound in the plan.
+    val toks = Tables.documents(s, dir).select(split(col("text"), " ").as("toks"))
+    val uni = toks.select(explode(col("toks")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("cu"))
+    val cb0 = toks
+      .select(col("toks"), posexplode(col("toks")).as(Seq("pos", "w1")))
+      .filter(col("pos") + 2 <= size(col("toks")))
+      .select(col("w1"), element_at(col("toks"), col("pos") + 2).as("w2"))
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+      .localCheckpoint()
+    val tt = uni.agg(sum(col("cu")).as("t"))
+    val bt = cb0.agg(sum(col("c2")).as("b"))
+    val cb = cb0.filter(col("c2") >= PmiMinSupport)
     cb.join(broadcast(uni.select(col("w").as("w1"), col("cu").as("cu1"))), Seq("w1"))
       .join(broadcast(uni.select(col("w").as("w2"), col("cu").as("cu2"))), Seq("w2"))
       .crossJoin(broadcast(tt)).crossJoin(broadcast(bt))

@@ -861,9 +861,9 @@ object Round8Queries {
     * quality rule (Rae et al., 2021), the intra-doc complement of
     * q153's cross-corpus spans: machine-generated and boilerplate text
     * repeats itself locally, and this is the standard cheap detector.
-    * 4-grams come from three `lead`s over the per-doc window (codegen,
-    * the q153 lesson — a transform-lambda gram builder pays interpreted
-    * per-element evals); duplicate membership is a (doc, gram) count —
+    * 4-grams come from `element_at` probes into each doc's own token
+    * array (row-local and codegen — no per-doc window, no interpreted
+    * transform lambda); duplicate membership is a (doc, gram) count —
     * the gram exchange is doc-keyed, so at 100 TB it partitions with
     * the document and never sees cross-doc traffic. Per-source rate is
     * one exact-long division (HALF_UP micro).
@@ -871,33 +871,18 @@ object Round8Queries {
   val RepN = 4
 
   def q168IntraDocRepetition(s: SparkSession, dir: String): DataFrame = {
-    val local = s.conf.getOption("spark.graft.ngram.local").forall(_.toBoolean)
     // row-local 4-grams (the q140/positionalShingles rationale, guide
     // section 2.4): the three following tokens are element_at probes
     // into the SAME row's array -- all codegen, no corpus-token
-    // exchange + sort; the hatch restores the lead-window spelling
-    // (bit-identical output)
-    val grams = if (local) Tables.documents(s, dir)
+    // exchange + sort
+    val grams = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), col("source"), col("toks"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
       .filter(col("pos") + RepN <= size(col("toks")))
       .select(col("doc_id"), col("source"),
-        concat_ws("", (col("tok") +: (1 until RepN).map(i =>
+        concat_ws("", (col("tok") +: (1 until RepN).map(i =>
           element_at(col("toks"), col("pos") + lit(i + 1)))): _*).as("g"))
-    else {
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-        .select(col("doc_id"), col("source"), col("pos"),
-          concat_ws("", col("tok"),
-            lead(col("tok"), 1).over(w), lead(col("tok"), 2).over(w),
-            lead(col("tok"), 3).over(w)).as("g"),
-          lead(col("tok"), 3).over(w).isNotNull.as("full"))
-        .filter(col("full"))
-        .select(col("doc_id"), col("source"), col("g"))
-    }
     grams
       .groupBy(col("doc_id"), col("source"), col("g"))
       .agg(count(lit(1)).as("cnt"))

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact global `row_number` over a TOTAL order without the
@@ -27,20 +26,12 @@ import org.apache.spark.sql.functions._
   * boundaries land. The checkpoint pins intra-partition order, making
   * the ordinal well-defined under retries (checkpoint blocks re-read
   * in order).
-  *
-  * Escape hatch for A/B: `spark.graft.rank.distributed=false` restores
-  * the single-partition window spelling.
   */
 object GlobalRank {
   /** `df` plus `rankAs` = the 1-based global row number under
     * `order` (must be a total order over `df`'s rows). */
   def rowNumber(df: DataFrame, rankAs: String, order: Column*): DataFrame = {
     require(order.nonEmpty, "GlobalRank.rowNumber: empty order")
-    val spark = df.sparkSession
-    if (!spark.conf.getOption("spark.graft.rank.distributed")
-        .forall(_.toBoolean))
-      return df.withColumn(rankAs,
-        row_number().over(Window.orderBy(order: _*)).cast("long"))
     val parted = df.repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
       .localCheckpoint()

@@ -79,10 +79,10 @@ object Similarity {
     * the inverted-index join degenerates to near-quadratic shuffle
     * volume (Σ_w n_w² rows with n_w ≈ corpus size). Vectors are pivoted
     * to dense `array<double>` in vocabulary order, the right side is
-    * broadcast, and the codegen'd [[graft.functions.DoubleDotProduct]]
-    * scores pairs with NO shuffle at all; the per-query argmax is a
-    * partial-aggregated `max_by` (no window sort, no pair
-    * materialization past the aggregate).
+    * collected and broadcast as a plain array, and a primitive dot loop
+    * inside `mapPartitions` scores each left row against it with NO
+    * shuffle and no pair materialization; each left row keeps only its
+    * best match.
     *
     * Result-identical to invertedIndexJoin + argmax: a dot of
     * strictly-positive weights is 0 iff there is no term overlap, so
@@ -95,7 +95,6 @@ object Similarity {
       maxDenseVocab: Long = 2048, maxDenseBytes: Long = 64L << 20,
       precollectedVocab: Option[Array[String]] = None): DataFrame = {
     val spark = left.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     // Self-join shortcut (densify once, rename) is an explicit contract:
     // pass selfJoinOpt = Some(true/false) to control it. The default falls
     // back to object identity — a conservative under-approximation (two

@@ -47,17 +47,10 @@ object TextPrep {
     * subtree (regex, lower, split) interpreted per row, on every
     * corpus tokenize in the repo. [[normalize]] trims and collapses
     * separator runs, so the only removable token is the single "" that
-    * fully-empty text splits to — the two spellings are value-identical
-    * (TextPrepSpec pins it). Escape hatch
-    * `spark.graft.tokens.codegen=false` restores the lambda for A/B.
+    * fully-empty text splits to, and removing it by value equals a
+    * `w =!= ""` filter (TextPrepSpec pins the edge rows).
     */
-  def tokensCol(c: Column): Column = {
-    val codegen = org.apache.spark.sql.SparkSession.getActiveSession
-      .forall(_.conf.getOption("spark.graft.tokens.codegen")
-        .forall(_.toBoolean))
-    if (codegen) array_remove(split(normalize(c), " "), "")
-    else filter(split(normalize(c), " "), w => w =!= "")
-  }
+  def tokensCol(c: Column): Column = array_remove(split(normalize(c), " "), "")
 
   /** M2 as an expression: drop stop words from a token array. */
   def removeStopwords(tokens: Column, stopwords: Seq[String] = DefaultStopwords): Column =

@@ -1,28 +1,40 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.text.TextPrep
 
-/** Equality laws for the round-16 row-local n-gram spellings: each
-  * replaced a per-doc window-`lead` (or interpreted higher-order
-  * lambda) gram builder with posexplode + element_at probes into the
-  * same row's token array, so the spec pins BIT-IDENTICAL output
-  * against the original spelling — via the `spark.graft.shingles.local`
-  * / `spark.graft.ngram.local` / `spark.graft.tokens.codegen` escape
-  * hatches — on the sf0.001 corpus plus hand-built edge rows (empty
-  * text, punctuation-only text, docs shorter than n).
+/** Equality law for the row-local positional shingles: the builder
+  * replaced a per-doc window-`lead` gram builder with posexplode +
+  * element_at probes into the same row's token array, so the spec pins
+  * BIT-IDENTICAL output (positions included) against the window
+  * spelling, written out below as the reference, on the sf0.001 corpus
+  * plus hand-built edge rows (empty text, punctuation-only text, docs
+  * shorter than n).
   */
 class ShingleLocalSpec extends SparkTestBase {
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    spark.conf.set(key, value)
-    try body finally spark.conf.unset(key)
+  /** Reference spelling: one `lead` per follower over a doc-keyed
+    * window, keeping only shingles with all n−1 followers present. */
+  private def positionalShinglesWindow(df: DataFrame, idCol: String,
+      textCol: String, n: Int): DataFrame = {
+    val toks = df.select(col(idCol).as("id"),
+        posexplode(split(TextPrep.normalize(col(textCol)), " ")).as(Seq("pos", "w")))
+      .filter(col("w") =!= "")
+    val wnd = Window.partitionBy(col("id")).orderBy(col("pos"))
+    val withLeads = (1 until n).foldLeft(toks) { (acc, i) =>
+      acc.withColumn(s"w$i", lead(col("w"), i).over(wnd))
+    }
+    val parts = col("w") +: (1 until n).map(i => col(s"w$i"))
+    withLeads
+      .filter((1 until n).map(i => col(s"w$i").isNotNull).reduceOption(_ && _).getOrElse(lit(true)))
+      .select(col("id"), col("pos"), concat_ws(" ", parts: _*).as("shingle"))
   }
 
   private def docs: DataFrame = {
@@ -40,41 +52,8 @@ class ShingleLocalSpec extends SparkTestBase {
   test("positionalShingles row-local ≡ window-lead, incl. pos, n ∈ {1,2,3,5}") {
     for (n <- Seq(1, 2, 3, 5)) {
       val local = sortedRows(Dedup.positionalShingles(docs, "doc_id", "text", n))
-      val window = sortedRows(
-        Dedup.positionalShinglesWindow(docs, "doc_id", "text", n))
+      val window = sortedRows(positionalShinglesWindow(docs, "doc_id", "text", n))
       assert(local == window, s"n=$n")
-      val hatch = withConf("spark.graft.shingles.local", "false") {
-        sortedRows(Dedup.positionalShingles(docs, "doc_id", "text", n))
-      }
-      assert(hatch == window, s"hatch inert for n=$n")
-    }
-  }
-
-  test("tokensCol array_remove ≡ filter-lambda") {
-    val a = sortedRows(docs.select(col("doc_id"),
-      TextPrep.tokensCol(col("text")).as("toks")))
-    val b = withConf("spark.graft.tokens.codegen", "false") {
-      sortedRows(docs.select(col("doc_id"),
-        TextPrep.tokensCol(col("text")).as("toks")))
-    }
-    assert(a == b)
-  }
-
-  test("row-local n-gram queries ≡ their window spellings on sf0.001") {
-    val names = Seq("q140_bigram_lm", "q150_pmi_collocations",
-      "q168_intra_doc_repetition", "q261_self_bleu", "q227_rouge2",
-      "q87_boilerplate_share", "q76_decontamination")
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries(name)
-      val now = sortedRows(fn(spark, sf0001))
-      val old = withConf("spark.graft.ngram.local", "false") {
-        withConf("spark.graft.shingles.local", "false") {
-          withConf("spark.graft.tokens.codegen", "false") {
-            sortedRows(fn(spark, sf0001))
-          }
-        }
-      }
-      assert(now == old, name)
     }
   }
 }

@@ -29,16 +29,9 @@ class GlobalRankSpec extends SparkTestBase {
     assert(viaDist.values.toSeq.sorted === (1L to viaDist.size.toLong))
   }
 
-  test("escape hatch restores the window spelling, same result") {
+  test("ties on f break by word in the distributed rank") {
     val df = Seq(("b", 3L), ("a", 3L), ("c", 1L), ("d", 9L))
       .toDF("word", "f")
-    spark.conf.set("spark.graft.rank.distributed", "false")
-    try {
-      val hatch = GlobalRank.rowNumber(df, "r", $"f".desc, $"word")
-        .select($"word", $"r").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toMap
-      assert(hatch === Map("d" -> 1L, "a" -> 2L, "b" -> 3L, "c" -> 4L))
-    } finally spark.conf.unset("spark.graft.rank.distributed")
     val dist = GlobalRank.rowNumber(df, "r", $"f".desc, $"word")
       .select($"word", $"r").collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap

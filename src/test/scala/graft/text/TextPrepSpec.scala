@@ -13,6 +13,9 @@ class TextPrepSpec extends SparkTestBase {
   }
 
   test("tokensCol drops empty tokens; filteredTokensCol drops stopwords, keeps dups") {
+    val toks = Seq("The cat AND the cat!", "", "... 42 --- 7 !!").toDF("t")
+      .select(TextPrep.tokensCol($"t").as("toks")).collect().map(_.getSeq[String](0))
+    assert(toks.toSeq === Seq(Seq("the", "cat", "and", "the", "cat"), Seq(), Seq()))
     val r = Seq("The cat AND the cat!").toDF("t")
       .select(TextPrep.filteredTokensCol($"t").as("toks")).head.getSeq[String](0)
     assert(r === Seq("cat", "cat"))
