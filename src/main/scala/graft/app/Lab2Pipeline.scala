@@ -67,26 +67,11 @@ object Lab2Pipeline {
 
     val n = prepped.count() // corpus size feeds IDF (lab2.py:155)
 
-    // ---- task 1
-    // weights and sims are rounded to 6 dp before ranking — the house
-    // determinism contract (same as q12/q50): cross-engine FP drift in
-    // log10/sqrt chains sits at ~1e-15, far below the rounding, so
-    // ranking and the DuckDB oracle see identical values. Deterministic
-    // deviation from the reference's raw-double ranking, like the
-    // tie-break (SURVEY.md §2.10.4).
+    // ---- task 1 (the shared core; string ids take the inverted join)
     val absToks = prepped.select(col("id"), explode(col("abs_toks")).as("word"))
-    val absDf = TfIdf.docFreq(absToks).persist() // reused for titles (J2)
-    val absVecs = TfIdf.l2Normalize(
-        TfIdf.weights(TfIdf.termFreq(absToks), absDf, n))
-      .withColumn("w", round(col("w"), 6))
+    val corpus = Task1.corpus(absToks, n, _.persist()) // df reused for titles (J2)
     val titleToks = prepped.select(col("id"), explode(col("title_toks")).as("word"))
-    val titleVecs = TfIdf.l2Normalize(
-        TfIdf.weights(TfIdf.termFreq(titleToks), absDf, n, external = true))
-      .withColumn("w", round(col("w"), 6))
-
-    val sims = Similarity.invertedIndexJoin(titleVecs, absVecs)
-      .withColumn("sim", round(col("sim"), 6))
-    val matches = Similarity.argmax(sims)
+    val matches = Task1.matches(Task1.titleVectors(titleToks, corpus), corpus)
       .select(col("l_id").as("title_id"), col("r_id").as("abstract_id"),
         col("sim").as("cosine"))
       .persist() // shared: accuracy + parquet + sample (lab2.py recomputes)
@@ -126,12 +111,20 @@ object Lab2Pipeline {
       .join(catSims, Seq("l_id", "r_id"), "left")
       .select(col("l_id"), col("r_id"),
         round(coalesce(col("sim"), lit(0.0)), 6).as("sim"))
+    // the pivot's column list as Spark's implicit pivot would collect it
+    // (sorted, nulls first, at most spark.sql.pivotMaxValues) — but from
+    // the persisted token table, not a distinct job over the whole matrix
+    val maxKeys = spark.conf.get("spark.sql.pivotMaxValues").toInt
+    val catKeys = cats.limit(maxKeys + 1).orderBy(col("categories"))
+      .collect().map(_.get(0)).toSeq
+    require(catKeys.length <= maxKeys, s"Lab2Pipeline: more than " +
+      s"spark.sql.pivotMaxValues=$maxKeys categories for the category matrix")
     val categoryMatrix = catMatrixLong
-      .groupBy(col("l_id")).pivot("r_id").agg(first(col("sim")))
+      .groupBy(col("l_id")).pivot("r_id", catKeys).agg(first(col("sim")))
       .na.fill(0.0).orderBy(col("l_id"))
 
     Result(accuracy, matches, mismatchSample, categoryMatrix,
-      persisted = Seq(prepped, absDf, matches))
+      persisted = Seq(prepped, corpus.dfreq, matches))
   }
 
   /** CLI entry mirroring the reference's six arguments (lab2.py:49–60):

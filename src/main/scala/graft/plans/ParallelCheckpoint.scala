@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Scale-adaptive parallelism restore for CHECKPOINTED intermediates
   * whose consumers are CPU-bound (optimization guide §2.5 "input skew
@@ -40,8 +41,21 @@ object ParallelCheckpoint {
     if (!spark.conf.getOption("spark.graft.checkpoint.parallel")
         .forall(_.toBoolean)) return ckpt
     val cores = spark.sparkContext.defaultParallelism
-    if (ckpt.rdd.getNumPartitions < cores)
-      ckpt.repartition(cores).localCheckpoint()
-    else ckpt
+    if (ckpt.rdd.getNumPartitions < cores) {
+      val wide = ckpt.repartition(cores).localCheckpoint()
+      release(ckpt) // the eager re-checkpoint no longer reads it
+      wide
+    } else ckpt
+  }
+
+  /** Frees what `df` holds: its cache entry and the blocks of every
+    * checkpointed RDD its plan reads. A released checkpoint cannot be
+    * recomputed, so only call this once no live plan reads `df`. */
+  def release(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
   }
 }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * sides (Task-2 matrices), and MinHash LSH (graft.dedup) is the
   * approximate path at 100 TB.
   */
-object Similarity {
+object Similarity extends org.apache.spark.internal.Logging {
 
   /** Exact inverted-index similarity join between two long-form vector
     * tables with columns (id, word, w). Returns (l_id, r_id, sim) for all
@@ -77,103 +77,140 @@ object Similarity {
   /** Dense-broadcast argmax strategy — the right physical plan when the
     * vocabulary is SMALL and DENSE (every term in most documents), where
     * the inverted-index join degenerates to near-quadratic shuffle
-    * volume (Σ_w n_w² rows with n_w ≈ corpus size). Vectors are pivoted
-    * to dense `array<double>` in vocabulary order, the right side is
-    * collected and broadcast as a plain array, and a primitive dot loop
-    * inside `mapPartitions` scores each left row against it with NO
-    * shuffle and no pair materialization; each left row keeps only its
-    * best match.
+    * volume (Σ_w n_w² rows with n_w ≈ corpus size). Vectors are grouped
+    * to sparse (idx → w) maps in vocabulary order, the right side is
+    * collected, expanded to dense `array<double>` on the driver and
+    * broadcast as a plain array, and a primitive dot loop inside
+    * `mapPartitions` scores each left row against it with NO shuffle
+    * and no pair materialization; each left row keeps only its best
+    * match.
     *
     * Result-identical to invertedIndexJoin + argmax: a dot of
     * strictly-positive weights is 0 iff there is no term overlap, so
     * `sim_raw > 0` reproduces the inverted join's pair set exactly, and
     * ranking uses the same (rounded sim desc, id asc) contract.
     * Requires numeric ids. Exposed via [[argmaxAdaptive]].
+    *
+    * Actions run while the plan is built (the returned scoring plan
+    * runs when consumed):
+    *  - the vocabulary collect;
+    *  - two-sided: the right side's bounded collect, straight from its
+    *    grouped aggregate (it is consumed once, by that collect), then
+    *    the left side's [[graft.plans.ParallelCheckpoint]];
+    *  - self-join (`left eq right`): the one checkpointed build, then
+    *    the bounded collect off that same build.
+    * Both bounds fail loudly here: a vocabulary over `maxDenseVocab`,
+    * or a right side over `maxDenseBytes`. [[argmaxAdaptive]] falls
+    * back to the inverted-index join instead.
     */
   def denseArgmax(left: DataFrame, right: DataFrame,
-      excludeSelf: Boolean = false, selfJoinOpt: Option[Boolean] = None,
-      maxDenseVocab: Long = 2048, maxDenseBytes: Long = 64L << 20,
-      precollectedVocab: Option[Array[String]] = None): DataFrame = {
-    val spark = left.sparkSession
-    // Self-join shortcut (densify once, rename) is an explicit contract:
-    // pass selfJoinOpt = Some(true/false) to control it. The default falls
-    // back to object identity — a conservative under-approximation (two
-    // structurally identical but distinct frames rebuild the plan twice,
-    // correct but 2× work), never a wrong answer.
-    val selfJoin = selfJoinOpt.getOrElse(left eq right)
-    val wordSrc = if (selfJoin) left.select(col("word"))
-      else left.select(col("word")).unionAll(right.select(col("word")))
-    // Preconditions ENFORCED here, not only in [[argmaxAdaptive]]: a
-    // direct caller must not be able to ship gigabytes to the driver.
-    // The vocab collect is limit-bounded (TakeOrderedAndProject — one
-    // job, driver memory capped at maxDenseVocab+1 words) and fails
-    // loudly when the vocabulary exceeds the bound.
-    val limitN = (maxDenseVocab + 1).min(Int.MaxValue.toLong).toInt
-    val words = precollectedVocab.getOrElse {
-      wordSrc.distinct().orderBy(col("word")).limit(limitN)
-        .collect().map(_.getString(0))
-    }
+      excludeSelf: Boolean = false, maxDenseVocab: Long = 2048,
+      maxDenseBytes: Long = 64L << 20): DataFrame = {
+    // object identity is a conservative under-approximation of a
+    // self-join: two structurally identical but distinct frames build
+    // twice, correct but 2× work, never a wrong answer
+    val selfJoin = left eq right
+    val words = collectVocab(left, right, selfJoin, maxDenseVocab)
     require(words.length <= maxDenseVocab,
       s"denseArgmax: vocabulary exceeds maxDenseVocab=$maxDenseVocab — " +
         "use the inverted-index strategy (argmaxAdaptive) for large vocabularies")
-    val dim = words.length
-    import spark.implicits._
-    val vocab = broadcast(words.zipWithIndex.toSeq.toDF("word", "idx"))
-    def toDense(df: DataFrame, idAs: String, vecAs: String): DataFrame = {
-      val m = map_from_entries(collect_list(struct(col("idx"), col("w"))))
-      // the local scoring loop reads ids as Long (getLong / as[(Long, _)]);
-      // cast here so IntegerType/ShortType ids survive the dense path.
-      // The grouped (id → sparse idx map) rows are checkpointed, and the
-      // dense-array expansion — an interpreted higher-order transform,
-      // dim element_at probes per row — is deferred PAST the checkpoint:
-      // AQE coalesces this small-bytes post-shuffle agg to 1–2
-      // partitions, and running the expansion inside that pin serialized
-      // it (measured: q13 spent 2 × 0.95 s in back-to-back 1-task
-      // stages building these arrays — once for the broadcast collect,
-      // once recomputed under the scoring loop). ParallelCheckpoint
-      // restores session parallelism and the self-join rename below now
-      // shares ONE materialized build instead of recomputing the plan.
-      val grouped = graft.plans.ParallelCheckpoint(
-        df.join(vocab, Seq("word"))
-          .groupBy(col("id").cast("long").as(idAs))
-          .agg(m.as("__m")))
-      grouped.select(col(idAs),
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => coalesce(element_at(col("__m"), i), lit(0.0))).as(vecAs))
+    denseScore(left, right, excludeSelf, selfJoin, words, maxDenseBytes) match {
+      case Right(scored) => scored
+      case Left(maxRows) => throw new IllegalArgumentException(
+        s"denseArgmax: dense right side exceeds maxDenseBytes=$maxDenseBytes " +
+          s"(> $maxRows rows × ${words.length} dims × 8 B) — use argmaxAdaptive, " +
+          "which falls back to the inverted-index strategy above the byte bound")
     }
-    val l = toDense(left, "l_id", "lv")
-    // self-join: rename the SAME dense plan instead of rebuilding the
-    // whole vectorization pipeline a second time
-    val r = if (selfJoin) l.select(col("l_id").as("r_id"), col("lv").as("rv"))
-      else toDense(right, "r_id", "rv")
+  }
 
-    // Physical scoring strategy: the BroadcastNestedLoopJoin form
-    // materializes every (pair) row (~0.5 KB each — dominates runtime);
-    // when the right side is broadcast-sized we instead ship it as a
-    // plain array and run a tight primitive loop per left row
-    // (mapPartitions — SURVEY §7.3 preference (d), justified: no
-    // declarative form scores pairs without materializing them).
-    // Ranking contract identical: (sim rounded 6dp desc, r_id asc),
-    // zero dots excluded; winner's sim re-rounded with the same
-    // HALF_UP BigDecimal rule Spark's round() uses.
-    //
-    // The collect itself is byte-bounded WITHOUT an extra counting job:
-    // collect through limit(maxRows+1) (CollectLimit — per-partition
-    // limits, driver memory capped at maxDenseBytes + one row) and fail
-    // if the limit truncated. maxRows+1 rows back ⇒ the right side was
-    // bigger than the bound; ≤ maxRows rows back ⇒ the limit was a
-    // no-op and the array is the COMPLETE set.
+  /** The sorted distinct vocabulary of both sides, collected through
+    * limit(maxDenseVocab+1) (TakeOrderedAndProject — one action, driver
+    * memory capped at maxDenseVocab+1 words). More than maxDenseVocab
+    * words back means the vocabulary is over the bound; at most
+    * maxDenseVocab means the limit was a no-op and the array is the
+    * complete vocabulary. */
+  private def collectVocab(left: DataFrame, right: DataFrame, selfJoin: Boolean,
+      maxDenseVocab: Long): Array[String] = {
+    val wordSrc = if (selfJoin) left.select(col("word"))
+      else left.select(col("word")).unionAll(right.select(col("word")))
+    val limitN = (maxDenseVocab + 1).min(Int.MaxValue.toLong).toInt
+    wordSrc.distinct().orderBy(col("word")).limit(limitN)
+      .collect().map(_.getString(0))
+  }
+
+  /** The dense scoring plan over vocabulary `words`, or Left(maxRows)
+    * when the right side holds more than maxRows = maxDenseBytes /
+    * (dim × 8 B) rows.
+    *
+    * The right side is collected through limit(maxRows+1) (CollectLimit
+    * — per-partition limits, driver memory capped at maxDenseBytes plus
+    * one row): maxRows+1 rows back ⇒ the right side is over the bound;
+    * at most maxRows ⇒ the limit was a no-op and the array is the
+    * COMPLETE set. No counting job runs. It is collected as sparse
+    * (id, idx → w) rows and expanded to dense arrays on the driver.
+    */
+  private def denseScore(left: DataFrame, right: DataFrame, excludeSelf: Boolean,
+      selfJoin: Boolean, words: Array[String],
+      maxDenseBytes: Long): Either[Long, DataFrame] = {
+    val spark = left.sparkSession
+    import spark.implicits._
+    val dim = words.length
+    val vocab = broadcast(words.zipWithIndex.toSeq.toDF("word", "idx"))
+    // (id → sparse idx map) rows; the scoring loop reads ids as Long,
+    // so IntegerType/ShortType ids are cast here
+    def grouped(df: DataFrame, idAs: String): DataFrame =
+      df.join(vocab, Seq("word"))
+        .groupBy(col("id").cast("long").as(idAs))
+        .agg(map_from_entries(collect_list(
+          struct(col("idx"), col("w").cast("double")))).as("__m"))
+    // The left side is checkpointed, and its dense-array expansion — an
+    // interpreted higher-order transform, dim element_at probes per row
+    // — is deferred PAST the checkpoint: AQE coalesces this small-bytes
+    // post-shuffle agg to 1–2 partitions, and running the expansion
+    // inside that pin serialized it (measured: q13 spent 2 × 0.95 s in
+    // back-to-back 1-task stages building these arrays).
+    // ParallelCheckpoint restores session parallelism, and a self-join
+    // collects its right side off the same materialized build.
+    def dense(g: DataFrame): DataFrame =
+      g.select(col("l_id"), transform(sequence(lit(0), lit(dim - 1)),
+        i => coalesce(element_at(col("__m"), i), lit(0.0))).as("lv"))
+    def checkpointedLeft(): DataFrame =
+      graft.plans.ParallelCheckpoint(grouped(left, "l_id"))
     val maxRows = if (dim == 0) Long.MaxValue else maxDenseBytes / (dim.toLong * 8L)
     val limitRows = (math.min(maxRows, Int.MaxValue.toLong - 1L) + 1L).toInt
-    val rRows: Array[(Long, Array[Double])] =
-      r.limit(limitRows).collect()
-        .map(row => (row.getLong(0), row.getSeq[Double](1).toArray))
-    require(rRows.length <= maxRows,
-      s"denseArgmax: dense right side exceeds maxDenseBytes=$maxDenseBytes " +
-        s"(> $maxRows rows × $dim dims × 8 B) — use argmaxAdaptive, which falls " +
-        "back to the inverted-index strategy above the byte bound")
-    val bc = spark.sparkContext.broadcast(rRows)
+    def collectRight(sparse: DataFrame): Option[Array[(Long, Array[Double])]] = {
+      val rows = sparse.limit(limitRows).collect()
+      if (rows.length > maxRows) None
+      else Some(rows.map { row =>
+        val v = new Array[Double](dim)
+        row.getMap[Int, Double](1).foreach { case (i, w) => v(i) = w }
+        (row.getLong(0), v)
+      })
+    }
+    val scored =
+      if (selfJoin) {
+        val g = checkpointedLeft()
+        val rs = collectRight(g)
+        if (rs.isEmpty) graft.plans.ParallelCheckpoint.release(g) // falling back
+        rs.map(scoreDense(dense(g), _, excludeSelf))
+      } else collectRight(grouped(right, "r_id"))
+        .map(rs => scoreDense(dense(checkpointedLeft()), rs, excludeSelf))
+    scored.toRight(maxRows)
+  }
+
+  /** Scores each dense left row (l_id, lv) against the collected right
+    * rows with a primitive dot loop (mapPartitions — SURVEY §7.3
+    * preference (d), justified: no declarative form scores pairs
+    * without materializing them; the BroadcastNestedLoopJoin form
+    * materializes every pair row, ~0.5 KB each). Ranking contract as
+    * the inverted join: (sim rounded 6dp desc, r_id asc), zero dots
+    * excluded; the winner's sim is re-rounded with the HALF_UP rule
+    * Spark's round() uses. */
+  private def scoreDense(l: DataFrame, rRows: Array[(Long, Array[Double])],
+      excludeSelf: Boolean): DataFrame = {
+    val spark = l.sparkSession
     import spark.implicits._
+    val bc = spark.sparkContext.broadcast(rRows)
     l.as[(Long, Array[Double])].mapPartitions { it =>
       val rs = bc.value
       it.flatMap { case (lid, lv) =>
@@ -275,9 +312,9 @@ object Similarity {
   }
 
   /** Strategy-picking argmax over long-form vectors — dense-broadcast
-    * when the vocabulary is small (≤ maxDenseVocab) and the dense
-    * corpus fits `maxDenseBytes`; the exact inverted-index join while
-    * its measured candidate-pair volume is inside `maxPairRows`; the
+    * when the vocabulary is small (≤ maxDenseVocab) and the dense right
+    * side fits `maxDenseBytes`; the exact inverted-index join while its
+    * measured candidate-pair volume is inside `maxPairRows`; the
     * banded-MinHash LSH blocked argmax ([[argmaxLshBlocked]]) past the
     * budget. THE ENGINE SWITCHES — the n²-regime fallback the 100 TB
     * argument needs is made here, from a measured pair estimate, not
@@ -294,6 +331,23 @@ object Similarity {
     * pair traffic, the scale where SCALE.md's measurements say the
     * inverted join stops being answerable).
     *
+    * The dense candidate needs INTEGRAL ids (the dense scorer casts to
+    * long and tie-breaks numerically — fractional ids would truncate);
+    * other ids go to the inverted join with no job at all. Its actions,
+    * in order, all while the plan is built:
+    *  1. the vocabulary collect (limit maxDenseVocab+1); over the bound
+    *     ⇒ fall back;
+    *  2. two-sided: the right side's collect (limit maxRows+1, maxRows =
+    *     maxDenseBytes / (dim × 8 B)) straight from its grouped
+    *     aggregate; truncated ⇒ fall back;
+    *  3. two-sided: the left side's checkpoint, only once the right side
+    *     has passed. A self-join checkpoints its one build before step 2
+    *     and collects off it.
+    * The byte bound is on bytes, not rows: 200k rows × 2048 dims would
+    * be 3.3 GB on the driver and every executor. A fallback logs one
+    * warning line naming the gate, dim, the rows seen against maxRows
+    * and the strategy taken.
+    *
     * Inputs must carry 6dp-rounded weights for oracle-stable sims (all
     * strategies round sims to 6dp before ranking).
     */
@@ -301,54 +355,36 @@ object Similarity {
       excludeSelf: Boolean = false, maxDenseVocab: Long = 2048,
       maxDenseBytes: Long = 64L << 20, exact: Boolean = true,
       maxPairRows: Long = -1L): DataFrame = {
-    // dense path preconditions: INTEGRAL ids (the dense scorer casts to
-    // long and tie-breaks numerically — fractional ids would truncate)
-    // and a dense corpus small IN BYTES to collect+broadcast: the
-    // collect at denseArgmax ships rows × dim × 8B doubles to the driver
-    // and every executor, so the guard must bound bytes, not rows —
-    // 200k rows × 2048 dims would be 3.3 GB. dim is known after the
-    // vocab collect, so no extra job is needed.
-    //
-    // ONE vocab pass, not two: the gate collects the distinct vocab
-    // through limit(maxDenseVocab+1) (TakeOrderedAndProject — bounded
-    // driver memory, single job) and branches on the array length;
-    // ≤ maxDenseVocab entries back means the limit was a no-op and the
-    // SAME array feeds denseArgmax (which previously re-collected the
-    // identical distinct set — one of the ~8 fixed-latency driver jobs
-    // in the q13/q50 decomposition, see SCALE.md).
     import org.apache.spark.sql.types._
     val integralIds = Seq(left, right).forall(_.schema("id").dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     })
-    val vocab: Option[Array[String]] =
-      if (!integralIds) None
-      else {
-        val limitN = (maxDenseVocab + 1).min(Int.MaxValue.toLong).toInt
-        val arr = left.select(col("word")).unionAll(right.select(col("word")))
-          .distinct().orderBy(col("word")).limit(limitN)
-          .collect().map(_.getString(0))
-        if (arr.length <= maxDenseVocab) Some(arr) else None
-      }
-    val denseBytes = vocab match {
-      case Some(words) =>
-        right.select(col("id")).distinct().count() * words.length.toLong * 8L
-      case None => Long.MaxValue
-    }
     val selfJoin = left eq right
+    // None: not a dense candidate; Left: the gate it failed
+    val dense: Option[Either[String, DataFrame]] =
+      if (!integralIds) None
+      else Some {
+        val words = collectVocab(left, right, selfJoin, maxDenseVocab)
+        if (words.length > maxDenseVocab)
+          Left(s"site=vocabulary dim>$maxDenseVocab (maxDenseVocab=$maxDenseVocab)")
+        else denseScore(left, right, excludeSelf, selfJoin, words, maxDenseBytes)
+          .left.map(maxRows => s"site=bytes dim=${words.length} " +
+            s"rowsSeen=${maxRows + 1} maxRows=$maxRows (maxDenseBytes=$maxDenseBytes)")
+      }
     val budget =
       if (maxPairRows >= 0) maxPairRows
       else left.sparkSession.conf.getOption("graft.similarity.maxPairRows")
         .map(_.toLong).getOrElse(2_000_000_000L)
-    chooseArgmaxStrategy(
-        denseEligible = vocab.isDefined && denseBytes <= maxDenseBytes,
-        exact = exact,
-        pairRows = estimateInvertedPairRows(left, right, selfJoin),
-        maxPairRows = budget) match {
-      case DenseStrategy =>
-        denseArgmax(left, right, excludeSelf, selfJoinOpt = Some(selfJoin),
-          maxDenseVocab = maxDenseVocab, maxDenseBytes = maxDenseBytes,
-          precollectedVocab = vocab)
+    val strategy = chooseArgmaxStrategy(
+      denseEligible = dense.exists(_.isRight),
+      exact = exact,
+      pairRows = estimateInvertedPairRows(left, right, selfJoin),
+      maxPairRows = budget)
+    dense.foreach(_.left.foreach(gate =>
+      logWarning(s"argmaxAdaptive: dense candidate fell back: $gate strategy=$strategy")))
+    strategy match {
+      case DenseStrategy => dense.get.toOption.get
       case InvertedStrategy =>
         val sims0 = invertedIndexJoin(left, right)
         val sims = (if (excludeSelf) sims0.filter(col("l_id") =!= col("r_id")) else sims0)

@@ -23,6 +23,73 @@ class PlanSpec extends SparkTestBase {
         if w.partitionSpec.isEmpty => w
     }
 
+  /** Corpus-scale leaves: the fact tables plus per-vector/per-doc index
+    * artifacts; region/nation/customer/supplier/part are star-schema
+    * dimensions (broadcasting their filtered forms is the intended plan
+    * at any scale the dimension itself fits). */
+  private val corpusScale = Seq("documents.parquet", "embeddings.parquet",
+    "events.parquet", "lineitem.parquet", "orders.parquet",
+    "/assignments", "/codes")
+
+  /** A broadcast side bounded BY SHAPE: an aggregate, a limit, a
+    * semi/anti join off a bounded left, a local relation, or a scan of a
+    * constant/dimension table. */
+  private def boundedSide(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.plans.{LeftSemi, LeftAnti}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    p match {
+      case _: Aggregate => true
+      case _: GlobalLimit | _: LocalLimit => true
+      case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
+        boundedSide(j.left)
+      case l: LogicalRelation => l.relation match {
+        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          !fs.location.rootPaths.exists(p =>
+            corpusScale.exists(p.toString.contains))
+        case _ => false
+      }
+      case _: LocalRelation | _: OneRowRelation | _: Range => true
+      case leaf: LeafNode =>
+        // unknown leaves (views, streaming sources) are NOT assumed
+        // small — flag them for the allowlist
+        false
+      case other => other.children.forall(boundedSide)
+    }
+  }
+
+  /** The join sides carrying an explicit BROADCAST hint. */
+  private def hintedSides(df: DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        val l = if (j.hint.leftHint.exists(_.strategy.exists(
+          _.toString.contains("broadcast")))) Seq(j.left) else Nil
+        val r = if (j.hint.rightHint.exists(_.strategy.exists(
+          _.toString.contains("broadcast")))) Seq(j.right) else Nil
+        l ++ r
+    }.flatten
+
+  /** What the two registry locks read off one gated query's plan. */
+  private final case class PlanAudit(unpartitionedWindow: Boolean,
+      unboundedBroadcast: Boolean)
+
+  /** Every gated query's plan, built ONCE for both registry locks:
+    * building a plan runs the query's eager lifecycle verbs, which
+    * dominate the suite when each lock builds every plan again. Left
+    * holds the planning failure; only the audit is kept, not the plan. */
+  private lazy val gatedPlanAudits: Seq[(String, Either[Throwable, PlanAudit])] =
+    graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try {
+        val df = fn(spark, sf0001)
+        Right(PlanAudit(unpartitionedWindows(df).nonEmpty,
+          hintedSides(df).exists(!boundedSide(_))))
+      } catch { case e: Throwable => Left(e) })
+    }
+
+  private def planned(name: String, audit: Either[Throwable, PlanAudit]): PlanAudit =
+    audit.fold(e => fail(s"$name failed to plan: ${e.getMessage}"), identity)
+
   test("q1: filter pushed into parquet scan; unused columns pruned; partial agg") {
     val p = formatted(RelationalOps.q1PricingSummary(spark, sf0001))
     assert(p.contains("PushedFilters"))
@@ -988,12 +1055,8 @@ class PlanSpec extends SparkTestBase {
       "q301_bucket_dial_auto" -> "the q281 class over the AUTO-bucketed artifact's vocabulary-sized df table; the counted auto-builds (tokenize + distinct-count + choice) run eagerly before the served plan exists",
       "q302_sql_masked_serve" -> "the q283 class reached through the graft_bm25_masked TVF (synthesis windows over the masked vocabulary-sized df table, resolved at analysis); the plan IS the DataFrame verb's plan by construction",
       "q304_maskeddf_alternation" -> "the q283 class over the alternation cycle's own lake replica: synthesis windows over A's tombstone-stamp-keyed masked-df state (vocabulary-sized); the cold build + four counted ensures run eagerly before the served plan exists")
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val ws = try unpartitionedWindows(fn(spark, sf0001)) catch {
-          case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}")
-        }
-        if (ws.nonEmpty) Some(name) else None
+    val offenders = gatedPlanAudits.flatMap { case (name, audit) =>
+      if (planned(name, audit).unpartitionedWindow) Some(name) else None
     }
     val unexpected = offenders.filterNot(bounded.contains)
     assert(unexpected.isEmpty,
@@ -1084,43 +1147,6 @@ class PlanSpec extends SparkTestBase {
     // local relation, or a scan of a constant/dimension table — or to
     // appear in the allowlist below with a justification (|Q|-bounded
     // query subsets and capacity-gated broadcasts land there).
-    // Corpus-scale leaves: the fact tables plus per-vector/per-doc
-    // index artifacts; region/nation/customer/supplier/part are
-    // star-schema dimensions (broadcasting their filtered forms is the
-    // intended plan at any scale the dimension itself fits).
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.catalyst.plans.{LeftSemi, LeftAnti}
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val corpusScale = Seq("documents.parquet", "embeddings.parquet",
-      "events.parquet", "lineitem.parquet", "orders.parquet",
-      "/assignments", "/codes")
-    def bounded(p: LogicalPlan): Boolean = p match {
-      case _: Aggregate => true
-      case _: GlobalLimit | _: LocalLimit => true
-      case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
-        bounded(j.left)
-      case l: LogicalRelation => l.relation match {
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          !fs.location.rootPaths.exists(p =>
-            corpusScale.exists(p.toString.contains))
-        case _ => false
-      }
-      case _: LocalRelation | _: OneRowRelation | _: Range => true
-      case leaf: LeafNode =>
-        // unknown leaves (views, streaming sources) are NOT assumed
-        // small — flag them for the allowlist
-        false
-      case other => other.children.forall(bounded)
-    }
-    def hintedSides(df: org.apache.spark.sql.DataFrame): Seq[LogicalPlan] =
-      df.queryExecution.optimizedPlan.collect {
-        case j: Join =>
-          val l = if (j.hint.leftHint.exists(_.strategy.exists(
-            _.toString.contains("broadcast")))) Seq(j.left) else Nil
-          val r = if (j.hint.rightHint.exists(_.strategy.exists(
-            _.toString.contains("broadcast")))) Seq(j.right) else Nil
-          l ++ r
-      }.flatten
     val justified: Map[String, String] = Map(
       // justification = why the hinted side is in fact bounded (or gated)
       "q21_knn_bruteforce" -> "query-side broadcast: the vec_id % 50 subset IS the query workload (|Q| = corpus/50 at the gate); a production query table is a broadcast-sized input",
@@ -1162,12 +1188,8 @@ class PlanSpec extends SparkTestBase {
       "q301_bucket_dial_auto" -> "the q281 serve shapes verbatim over the auto-bucketed index (LIMIT-150 query synthesis from the artifact's df table + its <=|Q|*2 distinct-terms projection, both localCheckpointed); the auto-build (tokenize + distinct vocab count + ladder choice) is a write that runs before the served plan exists",
       "q302_sql_masked_serve" -> "the q283 serve shapes verbatim, reached through the graft_bm25_masked TVF (analysis returns the DataFrame verb's own analyzed plan — LIMIT-150 query synthesis from the validated masked-df read + its <=|Q|*2 distinct-terms projection, both localCheckpointed; tombstone side capacity-gated via BoundedBroadcast)",
       "q304_maskeddf_alternation" -> "the q283 serve shapes verbatim over the alternation cycle's own lake replica (LIMIT-150 query synthesis from A's tombstone-stamp-keyed masked-df state + its <=|Q|*2 distinct-terms projection, both localCheckpointed; tombstone side capacity-gated via BoundedBroadcast); the cold index build and the four counted ensures are writes that run before the served plan exists")
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val unbounded = try hintedSides(fn(spark, sf0001)).filterNot(bounded) catch {
-          case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}")
-        }
-        if (unbounded.nonEmpty) Some(name) else None
+    val offenders = gatedPlanAudits.flatMap { case (name, audit) =>
+      if (planned(name, audit).unboundedBroadcast) Some(name) else None
     }
     val unexpected = offenders.filterNot(justified.contains)
     assert(unexpected.isEmpty,

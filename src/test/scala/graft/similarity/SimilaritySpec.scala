@@ -103,6 +103,50 @@ class SimilaritySpec extends SparkTestBase {
       unbounded.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
 
+  // two-sided fixtures: distinct frames, integral ids, vocabulary {q, x, y, z}
+  private lazy val titleVecs = Seq(
+    (1L, "x", 1.0), (2L, "y", 0.6), (2L, "z", 0.8), (3L, "q", 1.0))
+    .toDF("id", "word", "w")
+  private lazy val abstractVecs = Seq(
+    (10L, "x", 0.8), (10L, "y", 0.6), (11L, "z", 1.0), (12L, "y", 1.0))
+    .toDF("id", "word", "w")
+  private def matchSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("two-sided dense argmaxAdaptive runs no count job") {
+    val (dense, ran) = graft.JobCounter.during(spark) {
+      Similarity.argmaxAdaptive(titleVecs, abstractVecs, maxDenseVocab = 10)
+    }
+    // the vocabulary collect, the right side's bounded collect, then the
+    // left side's checkpoint (and the re-checkpoint that restores the
+    // session's 4-way parallelism); no count, no right-side checkpoint
+    assert(!ran.actions.contains("count"), s"count job in $ran")
+    assert(ran.jobs === 12, s"jobs: $ran")
+    assert(dense.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.isEmpty)
+    // title 3 shares no word with any abstract → no row
+    assert(matchSet(dense) === Set((1L, 10L, 0.8), (2L, 11L, 0.8)))
+    assert(matchSet(dense) ===
+      matchSet(Similarity.argmaxAdaptive(titleVecs, abstractVecs, maxDenseVocab = 0)))
+  }
+
+  test("two-sided argmaxAdaptive byte bound forces the inverted strategy") {
+    // dim 4 ⇒ maxRows = 40 B / (4 × 8 B) = 1 < 3 abstracts: the bounded
+    // collect comes back truncated and the call falls back, before the
+    // left side is densified
+    val (bounded, ran) = graft.JobCounter.during(spark) {
+      Similarity.argmaxAdaptive(titleVecs, abstractVecs,
+        maxDenseVocab = 10, maxDenseBytes = 40L)
+    }
+    assert(ran.actions === Seq("collect", "collect"), s"ran: $ran")
+    assert(bounded.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.nonEmpty)
+    assert(matchSet(bounded) ===
+      matchSet(Similarity.argmaxAdaptive(titleVecs, abstractVecs, maxDenseVocab = 10)))
+  }
+
   test("chooseArgmaxStrategy: three regimes; dense and exact never run the estimate") {
     import Similarity._
     // pairRows is by-name: regimes that cannot act on the estimate
