@@ -4,33 +4,41 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Aggregates the per-module query registries. Every entry in [[queries]]
-  * has a matching DuckDB oracle in [[oracleSql]] unless the operation is
-  * not SQL-expressible (those get the driver's weaker rows-only check and
-  * a ScalaTest spec instead).
+  * has its DuckDB oracle in [[oracleSql]]: a [[Query]] carries both.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.RelationalOps.q2RevenueByNation(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, listed once; each module declares its own
+    * [[Query]] entries. Order is declaration order (the bench headline
+    * runs in it). */
+  val registry: Seq[Query] = {
+    import operators._
+    val all = Seq(RelationalOps.registry, SupplyChainOps.registry,
+      DocQueries.registry, DedupQueries.registry, AnnQueries.registry,
+      TextStatsQueries.registry, EventQueries.registry,
+      MultimodalQueries.registry, Lab2Queries.registry, GraphQueries.registry,
+      Round7Queries.registry, Round8Queries.registry, Round9Queries.registry,
+      Round10Queries.registry, Round11Queries.registry,
+      Round12Queries.registry, Round13Queries.registry,
+      Round14Queries.registry, Round15Queries.registry,
+      Round16Queries.registry, UnigramQueries.registry,
+      Round17Queries.registry, Round18Queries.registry,
+      Round19Queries.registry).flatten
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names registered more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    all
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.RelationalOps.queries ++ operators.SupplyChainOps.queries ++
-      operators.DocQueries.queries ++
-      operators.DedupQueries.queries ++ operators.AnnQueries.queries ++
-      operators.TextStatsQueries.queries ++ operators.EventQueries.queries ++
-      operators.MultimodalQueries.queries ++ operators.Lab2Queries.queries ++
-      operators.GraphQueries.queries ++ operators.Round7Queries.queries ++
-      operators.Round8Queries.queries ++ operators.Round9Queries.queries ++
-      operators.Round10Queries.queries ++ operators.Round11Queries.queries ++
-      operators.Round12Queries.queries ++ operators.Round13Queries.queries ++
-      operators.Round14Queries.queries ++ operators.Round15Queries.queries ++
-      operators.Round16Queries.queries ++ operators.UnigramQueries.queries ++
-      operators.Round17Queries.queries ++ operators.Round18Queries.queries ++
-      operators.Round19Queries.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] = oracleSqlFor("/root/testdata/sf0.01")
 
   /** Oracle SQL parameterized by the gate's actual sf dir — q43's
@@ -38,17 +46,5 @@ object SparkEntry {
     * must dump the SQL for the dir it actually ran (a baked-in default
     * dir would read a missing/stale index under any other gate dir). */
   def oracleSqlFor(sfDir: String): Map[String, String] =
-    operators.RelationalOps.oracles ++ operators.SupplyChainOps.oracles ++
-      operators.DocQueries.oracles ++
-      operators.DedupQueries.oracles ++ operators.AnnQueries.oraclesFor(sfDir) ++
-      operators.TextStatsQueries.oracles ++ operators.EventQueries.oracles ++
-      operators.MultimodalQueries.oracles ++ operators.Lab2Queries.oracles ++
-      operators.GraphQueries.oracles ++ operators.Round7Queries.oracles ++
-      operators.Round8Queries.oracles ++ operators.Round9Queries.oracles ++
-      operators.Round10Queries.oracles ++ operators.Round11Queries.oracles ++
-      operators.Round12Queries.oracles ++ operators.Round13Queries.oracles ++
-      operators.Round14Queries.oracles ++ operators.Round15Queries.oracles ++
-      operators.Round16Queries.oracles ++ operators.UnigramQueries.oracles ++
-      operators.Round17Queries.oraclesFor(sfDir) ++
-      operators.Round18Queries.oracles ++ operators.Round19Queries.oracles
+    registry.map(q => q.name -> q.oracle(sfDir)).toMap
 }

@@ -365,25 +365,23 @@ case class Bm25OkapiFoldGrid(terms: Expression, dl: Expression,
 object Bm25Functions {
   /** Register the fold in the session's function registry (idempotent). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bm25_fold", { exprs =>
-        require(exprs.length == 6, "bm25_fold expects 6 arguments " +
-          "(terms array<struct<tf,df>>, dl, n_docs, avgdl, k1_micro, " +
-          s"b_micro); got ${exprs.length}")
-        Bm25OkapiFold(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-          exprs(5))
-      }, "built-in")
+    VectorFunctions.registerOnce(spark, "bm25_fold") { exprs =>
+      require(exprs.length == 6, "bm25_fold expects 6 arguments " +
+        "(terms array<struct<tf,df>>, dl, n_docs, avgdl, k1_micro, " +
+        s"b_micro); got ${exprs.length}")
+      Bm25OkapiFold(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
+        exprs(5))
+    }
 
   /** Register the grid-vectorized fold (idempotent). */
   def registerGrid(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bm25_fold_grid", { exprs =>
-        require(exprs.length == 6, "bm25_fold_grid expects 6 arguments " +
-          "(terms array<struct<tf,df>>, dl, n_docs, avgdl, k1_micros, " +
-          s"b_micros); got ${exprs.length}")
-        Bm25OkapiFoldGrid(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-          exprs(5))
-      }, "built-in")
+    VectorFunctions.registerOnce(spark, "bm25_fold_grid") { exprs =>
+      require(exprs.length == 6, "bm25_fold_grid expects 6 arguments " +
+        "(terms array<struct<tf,df>>, dl, n_docs, avgdl, k1_micros, " +
+        s"b_micros); got ${exprs.length}")
+      Bm25OkapiFoldGrid(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
+        exprs(5))
+    }
 
   /** Codegen'd Okapi fold (requires [[register]]); the caller applies
     * the contract's outer `round(_, 6)`. */

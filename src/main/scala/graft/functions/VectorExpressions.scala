@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -280,15 +281,25 @@ object VectorFunctions {
     * (idempotent). Needed once per SparkSession before using [[dot]].
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_dot", exprs => DoubleDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_quantize", exprs => QuantizeInt8(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot", exprs => IntDotProduct(exprs(0), exprs(1)), "built-in")
+    registerOnce(spark, "float_dot")(exprs => FloatDotProduct(exprs(0), exprs(1)))
+    registerOnce(spark, "double_dot")(exprs => DoubleDotProduct(exprs(0), exprs(1)))
+    registerOnce(spark, "int8_quantize")(exprs => QuantizeInt8(exprs(0)))
+    registerOnce(spark, "int_dot")(exprs => IntDotProduct(exprs(0), exprs(1)))
   }
+
+  /** Whether the session's function registry already holds `name`.
+    * Queries register their functions on every call, and replacing a
+    * registered function logs a warning each time, so registration
+    * skips a name that is already there. */
+  private[graft] def registered(spark: SparkSession, name: String): Boolean =
+    spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
+
+  /** Register `name` as a built-in unless the session already holds it. */
+  private[functions] def registerOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit =
+    if (!registered(spark, name))
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
 
   /** Codegen'd dot product of two array<float> columns (requires
     * [[register]]).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.ann.Ann
 
@@ -406,7 +407,7 @@ object AnnQueries {
   }
 
   // Generated PER DUMP DIR (Verify passes its actual sfDir through
-  // [[oraclesFor]]), so the oracle always reads the same index
+  // the registry's oracle), so the oracle always reads the same index
   // directory `prepareIvf` materializes for the gate run — baking the
   // path at class-load time from a hardcoded sf dir + the JVM's CWD
   // made any gate run with a different sfDir or working directory read
@@ -2239,80 +2240,41 @@ object AnnQueries {
     spliced
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q297_ivfpq_cursor_catchup" -> (q297IvfPqCursorCatchup _),
-    "q245_ivfpq_topk" -> (q245IvfPqTopK _),
-    "q251_ivfpq_append" -> (q251IvfPqAppendProbe _),
-    "q252_nprobe_curve" -> (q252NprobeCurve _),
-    "q254_ivfpq_delete" -> (q254IvfPqDelete _),
-    "q258_ivfpq_compact" -> (q258IvfPqCompact _),
-    "q259_pq_drift_audit" -> (q259PqDriftAudit _),
-    "q260_label_noise_audit" -> (q260LabelNoiseAudit _),
-    "q262_label_noise_blocked" -> (q262LabelNoiseBlocked _),
-    "q263_nprobe_auto" -> (q263NprobeAuto _),
-    "q272_nprobe_choice_persist" -> (q272NprobeChoicePersist _),
-    "q276_lifecycle_cycle" -> (q276LifecycleCycle _),
-    "q264_ivfpq_retrain" -> (q264IvfPqRetrain _),
-    "q265_compaction_policy" -> (q265CompactionPolicy _),
-    "q247_filtered_ann" -> (q247FilteredAnn _),
-    "q249_ivfpq_rerank" -> (q249IvfPqRerank _),
-    "q250_multiprobe_lsh" -> (q250MultiProbeLsh _),
-    "q20_lsh_top1_banded" -> (q20LshTop1Banded _),
-    "q21_knn_bruteforce" -> (q21KnnBruteForce _),
-    "q287_hard_negative_mining" -> (q287HardNegativeMining _),
-    "q22_lsh_buckets" -> (q22LshBuckets _),
-    "q23_lsh_top1" -> (q23LshTop1 _),
-    "q24_embedding_near_dups" -> (q24EmbeddingNearDups _),
-    "q43_ivf_topk" -> (q43IvfTopK _),
-    "q232_pq_topk" -> (q232PqTopK _),
-    "q233_pq_rerank" -> (q233PqRerank _),
-    "q47_embedding_centroids" -> (q47EmbeddingCentroids _),
-    "q49_nearest_centroid" -> (q49NearestCentroid _),
-    "q89_quantized_topk" -> (q89QuantizedTopK _),
-    "q99_ann_recall" -> (q99AnnRecall _),
-    "q102_semantic_dedup" -> (q102SemanticDedup _),
-    "q106_embedding_outliers" -> (q106EmbeddingOutliers _),
-    "q107_confusion_matrix" -> (q107ConfusionMatrix _),
-  )
-
-  /** Oracles whose SQL depends on the gate's sf dir (q43 reads the
+  /** The `sqlFor _` oracles depend on the gate's sf dir (q43 reads the
     * materialized IVF index for that dir); the rest are static. */
-  def oraclesFor(sfDir: String): Map[String, String] = Map(
-    "q297_ivfpq_cursor_catchup" -> q297Sql(sfDir),
-    "q245_ivfpq_topk" -> q245Sql(sfDir),
-    "q251_ivfpq_append" -> q251Sql(sfDir),
-    "q252_nprobe_curve" -> q252Sql(sfDir),
-    "q254_ivfpq_delete" -> q254Sql(sfDir),
-    "q258_ivfpq_compact" -> q258Sql(sfDir),
-    "q259_pq_drift_audit" -> q259Sql(sfDir),
-    "q260_label_noise_audit" -> q260Sql,
-    "q262_label_noise_blocked" -> q262Sql,
-    "q263_nprobe_auto" -> q263Sql(sfDir),
-    "q272_nprobe_choice_persist" -> q272Sql(sfDir),
-    "q276_lifecycle_cycle" -> q276Sql(sfDir),
-    "q264_ivfpq_retrain" -> q264Sql(sfDir),
-    "q265_compaction_policy" -> q265Sql(sfDir),
-    "q247_filtered_ann" -> q247Sql,
-    "q249_ivfpq_rerank" -> q249Sql(sfDir),
-    "q250_multiprobe_lsh" -> q250Sql,
-    "q20_lsh_top1_banded" -> q20Sql,
-    "q21_knn_bruteforce" -> q21Sql,
-    "q287_hard_negative_mining" -> q287Sql,
-    "q22_lsh_buckets" -> q22Sql,
-    "q23_lsh_top1" -> q23Sql,
-    "q24_embedding_near_dups" -> q24Sql,
-    "q43_ivf_topk" -> q43Sql(sfDir),
-    "q232_pq_topk" -> q232Sql(sfDir),
-    "q233_pq_rerank" -> q233Sql(sfDir),
-    "q47_embedding_centroids" -> q47Sql,
-    "q49_nearest_centroid" -> q49Sql,
-    "q89_quantized_topk" -> q89Sql,
-    "q99_ann_recall" -> q99Sql,
-    "q102_semantic_dedup" -> q102Sql,
-    "q106_embedding_outliers" -> q106Sql,
-    "q107_confusion_matrix" -> q107Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q297_ivfpq_cursor_catchup", q297IvfPqCursorCatchup _, q297Sql _),
+    Query("q245_ivfpq_topk", q245IvfPqTopK _, q245Sql _),
+    Query("q251_ivfpq_append", q251IvfPqAppendProbe _, q251Sql _),
+    Query("q252_nprobe_curve", q252NprobeCurve _, q252Sql _),
+    Query("q254_ivfpq_delete", q254IvfPqDelete _, q254Sql _),
+    Query("q258_ivfpq_compact", q258IvfPqCompact _, q258Sql _),
+    Query("q259_pq_drift_audit", q259PqDriftAudit _, q259Sql _),
+    Query("q260_label_noise_audit", q260LabelNoiseAudit _, q260Sql),
+    Query("q262_label_noise_blocked", q262LabelNoiseBlocked _, q262Sql),
+    Query("q263_nprobe_auto", q263NprobeAuto _, q263Sql _),
+    Query("q272_nprobe_choice_persist", q272NprobeChoicePersist _, q272Sql _),
+    Query("q276_lifecycle_cycle", q276LifecycleCycle _, q276Sql _),
+    Query("q264_ivfpq_retrain", q264IvfPqRetrain _, q264Sql _),
+    Query("q265_compaction_policy", q265CompactionPolicy _, q265Sql _),
+    Query("q247_filtered_ann", q247FilteredAnn _, q247Sql),
+    Query("q249_ivfpq_rerank", q249IvfPqRerank _, q249Sql _),
+    Query("q250_multiprobe_lsh", q250MultiProbeLsh _, q250Sql),
+    Query("q20_lsh_top1_banded", q20LshTop1Banded _, q20Sql),
+    Query("q21_knn_bruteforce", q21KnnBruteForce _, q21Sql),
+    Query("q287_hard_negative_mining", q287HardNegativeMining _, q287Sql),
+    Query("q22_lsh_buckets", q22LshBuckets _, q22Sql),
+    Query("q23_lsh_top1", q23LshTop1 _, q23Sql),
+    Query("q24_embedding_near_dups", q24EmbeddingNearDups _, q24Sql),
+    Query("q43_ivf_topk", q43IvfTopK _, q43Sql _),
+    Query("q232_pq_topk", q232PqTopK _, q232Sql _),
+    Query("q233_pq_rerank", q233PqRerank _, q233Sql _),
+    Query("q47_embedding_centroids", q47EmbeddingCentroids _, q47Sql),
+    Query("q49_nearest_centroid", q49NearestCentroid _, q49Sql),
+    Query("q89_quantized_topk", q89QuantizedTopK _, q89Sql),
+    Query("q99_ann_recall", q99AnnRecall _, q99Sql),
+    Query("q102_semantic_dedup", q102SemanticDedup _, q102Sql),
+    Query("q106_embedding_outliers", q106EmbeddingOutliers _, q106Sql),
+    Query("q107_confusion_matrix", q107ConfusionMatrix _, q107Sql),
   )
-
-  /** Contract default (the driver's gate runs at sf0.01). */
-  val oracles: Map[String, String] = oraclesFor("/root/testdata/sf0.01")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.dedup.Dedup
 import graft.tfidf.TfIdf
@@ -1592,57 +1593,30 @@ object DedupQueries {
        |    AS n_kept
        |FROM ranked GROUP BY source ORDER BY source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q117_kmv_distinct" -> (q117KmvDistinct _),
-    "q116_source_minhash_union" -> (q116SourceMinhashUnion _),
-    "q108_source_overlap" -> (q108SourceOverlap _),
-    "q128_split_leakage" -> (q128SplitLeakage _),
-    "q172_canonical_purge" -> (q172CanonicalPurge _),
-    "q105_minhash_calibration" -> (q105MinhashCalibration _),
-    "q100_dedup_survivorship" -> (q100DedupSurvivorship _),
-    "q87_boilerplate_share" -> (q87BoilerplateShare _),
-    "q76_decontamination" -> (q76Decontamination _),
-    "q78_incremental_dedup" -> (q78IncrementalDedup _),
-    "q66_triangles" -> (q66Triangles _),
-    "q61_winnowing" -> (q61Winnowing _),
-    "q62_top_bigrams_per_lang" -> (q62TopBigramsPerLang _),
-    "q14_dedup_exact" -> (q14DedupExact _),
-    "q15_minhash" -> (q15Minhash _),
-    "q16_lsh_near_dups" -> (q16LshNearDups _),
-    "q19_dup_clusters" -> (q19DupClusters _),
-    "q44_cc_synth" -> (q44CcSynth _),
-    "q242_lsh_recall_audit" -> (q242LshRecallAudit _),
-    "q243_banding_sweep" -> (q243BandingSweep _),
-    "q268_banding_auto" -> (q268BandingAuto _),
-    "q274_banding_persist" -> (q274BandingPersist _),
-    "q17_shingle_jaccard" -> (q17ShingleJaccard _),
-    "q18_simhash" -> (q18Simhash _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q117_kmv_distinct" -> q117Sql,
-    "q116_source_minhash_union" -> q116Sql,
-    "q108_source_overlap" -> q108Sql,
-    "q128_split_leakage" -> q128Sql,
-    "q172_canonical_purge" -> q172Sql,
-    "q105_minhash_calibration" -> q105Sql,
-    "q100_dedup_survivorship" -> q100Sql,
-    "q87_boilerplate_share" -> q87Sql,
-    "q76_decontamination" -> q76Sql,
-    "q78_incremental_dedup" -> q78Sql,
-    "q66_triangles" -> q66Sql,
-    "q61_winnowing" -> q61Sql,
-    "q62_top_bigrams_per_lang" -> q62Sql,
-    "q14_dedup_exact" -> q14Sql,
-    "q15_minhash" -> q15Sql,
-    "q16_lsh_near_dups" -> q16Sql,
-    "q19_dup_clusters" -> q19Sql,
-    "q44_cc_synth" -> q44Sql,
-    "q242_lsh_recall_audit" -> q242Sql,
-    "q243_banding_sweep" -> q243Sql,
-    "q268_banding_auto" -> q268Sql,
-    "q274_banding_persist" -> q274Sql,
-    "q17_shingle_jaccard" -> q17Sql,
-    "q18_simhash" -> q18Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q117_kmv_distinct", q117KmvDistinct _, q117Sql),
+    Query("q116_source_minhash_union", q116SourceMinhashUnion _, q116Sql),
+    Query("q108_source_overlap", q108SourceOverlap _, q108Sql),
+    Query("q128_split_leakage", q128SplitLeakage _, q128Sql),
+    Query("q172_canonical_purge", q172CanonicalPurge _, q172Sql),
+    Query("q105_minhash_calibration", q105MinhashCalibration _, q105Sql),
+    Query("q100_dedup_survivorship", q100DedupSurvivorship _, q100Sql),
+    Query("q87_boilerplate_share", q87BoilerplateShare _, q87Sql),
+    Query("q76_decontamination", q76Decontamination _, q76Sql),
+    Query("q78_incremental_dedup", q78IncrementalDedup _, q78Sql),
+    Query("q66_triangles", q66Triangles _, q66Sql),
+    Query("q61_winnowing", q61Winnowing _, q61Sql),
+    Query("q62_top_bigrams_per_lang", q62TopBigramsPerLang _, q62Sql),
+    Query("q14_dedup_exact", q14DedupExact _, q14Sql),
+    Query("q15_minhash", q15Minhash _, q15Sql),
+    Query("q16_lsh_near_dups", q16LshNearDups _, q16Sql),
+    Query("q19_dup_clusters", q19DupClusters _, q19Sql),
+    Query("q44_cc_synth", q44CcSynth _, q44Sql),
+    Query("q242_lsh_recall_audit", q242LshRecallAudit _, q242Sql),
+    Query("q243_banding_sweep", q243BandingSweep _, q243Sql),
+    Query("q268_banding_auto", q268BandingAuto _, q268Sql),
+    Query("q274_banding_persist", q274BandingPersist _, q274Sql),
+    Query("q17_shingle_jaccard", q17ShingleJaccard _, q17Sql),
+    Query("q18_simhash", q18Simhash _, q18Sql),
   )
 }

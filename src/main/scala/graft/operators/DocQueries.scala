@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.app.Task1
 import graft.text.TextPrep
@@ -486,33 +487,18 @@ object DocQueries {
        |SELECT doc_id, rk, word, w FROM ranked WHERE rk <= 3
        |ORDER BY doc_id, rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q194_doc_keywords" -> (q194DocKeywords _),
-    "q98_zipf_slope" -> (q98ZipfSlope _),
-    "q67_unpivot_source_langs" -> (q67UnpivotSourceLangs _),
-    "q10_tokens_tf" -> (q10TokensTf _),
-    "q11_doc_freq" -> (q11DocFreq _),
-    "q12_tfidf" -> (q12Tfidf _),
-    "q13_top1_similar" -> (q13Top1Similar _),
-    "q46_sql_top1" -> (q46SqlTop1 _),
-    "q50_task1_matches" -> (q50Task1Matches _),
-    "q51_task1_accuracy" -> (q51Task1Accuracy _),
-    "q52_lang_matrix" -> (q52LangMatrix _),
-    "q53_lang_matrix_pivot" -> (q53LangMatrixPivot _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q194_doc_keywords" -> q194Sql,
-    "q98_zipf_slope" -> q98Sql,
-    "q67_unpivot_source_langs" -> q67Sql,
-    "q10_tokens_tf" -> q10Sql,
-    "q11_doc_freq" -> q11Sql,
-    "q12_tfidf" -> q12Sql,
-    "q13_top1_similar" -> q13Sql,
-    "q46_sql_top1" -> q46Sql,
-    "q50_task1_matches" -> q50Sql,
-    "q51_task1_accuracy" -> q51Sql,
-    "q52_lang_matrix" -> q52Sql,
-    "q53_lang_matrix_pivot" -> q53Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q194_doc_keywords", q194DocKeywords _, q194Sql),
+    Query("q98_zipf_slope", q98ZipfSlope _, q98Sql),
+    Query("q67_unpivot_source_langs", q67UnpivotSourceLangs _, q67Sql),
+    Query("q10_tokens_tf", q10TokensTf _, q10Sql),
+    Query("q11_doc_freq", q11DocFreq _, q11Sql),
+    Query("q12_tfidf", q12Tfidf _, q12Sql),
+    Query("q13_top1_similar", q13Top1Similar _, q13Sql),
+    Query("q46_sql_top1", q46SqlTop1 _, q46Sql),
+    Query("q50_task1_matches", q50Task1Matches _, q50Sql),
+    Query("q51_task1_accuracy", q51Task1Accuracy _, q51Sql),
+    Query("q52_lang_matrix", q52LangMatrix _, q52Sql),
+    Query("q53_lang_matrix_pivot", q53LangMatrixPivot _, q53Sql),
   )
 }

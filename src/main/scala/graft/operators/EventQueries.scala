@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Batch analytics over the `events` stream table — the batch halves of
@@ -1246,61 +1247,32 @@ object EventQueries {
       |    CAST(round(1e6 * (n3 / n2)) AS BIGINT) FROM n)
       |ORDER BY stage""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q70_partition_pruning" -> (q70PartitionPruning _),
-    "q120_orc_lake" -> (q120OrcLake _),
-    "q121_zorder_key" -> (q121ZorderKey _),
-    "q122_cdc_merge" -> (q122CdcMerge _),
-    "q123_scd2" -> (q123Scd2 _),
-    "q124_compaction_plan" -> (q124CompactionPlan _),
-    "q125_skipping_manifest" -> (q125SkippingManifest _),
-    "q131_dirty_window_recompute" -> (q131DirtyWindowRecompute _),
-    "q170_value_histogram" -> (q170ValueHistogram _),
-    "q171_funnel" -> (q171Funnel _),
-    "q68_window_showcase" -> (q68WindowShowcase _),
-    "q65_funnel" -> (q65Funnel _),
-    "q58_salted_enrichment" -> (q58SaltedEnrichment _),
-    "q59_latest_per_key" -> (q59LatestPerKey _),
-    "q30_event_window_agg" -> (q30WindowAgg _),
-    "q31_sessionize" -> (q31Sessionize _),
-    "q111_session_window" -> (q111SessionWindow _),
-    "q112_resample_ffill" -> (q112ResampleFfill _),
-    "q118_winsorize" -> (q118Winsorize _),
-    "q119_robust_stats" -> (q119RobustStats _),
-    "q32_event_dedup" -> (q32EventDedup _),
-    "q33_asof_attribution" -> (q33AsofAttribution _),
-    "q35_json_extract" -> (q35JsonExtract _),
-    "q36_range_join_campaigns" -> (q36RangeJoinCampaigns _),
-    "q56_interval_overlap" -> (q56IntervalOverlap _),
-    "q38_trailing_window" -> (q38TrailingWindow _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q70_partition_pruning" -> q70Sql,
-    "q120_orc_lake" -> q120Sql,
-    "q121_zorder_key" -> q121Sql,
-    "q122_cdc_merge" -> q122Sql,
-    "q123_scd2" -> q123Sql,
-    "q124_compaction_plan" -> q124Sql,
-    "q125_skipping_manifest" -> q125Sql,
-    "q131_dirty_window_recompute" -> q131Sql,
-    "q170_value_histogram" -> q170Sql,
-    "q171_funnel" -> q171Sql,
-    "q68_window_showcase" -> q68Sql,
-    "q65_funnel" -> q65Sql,
-    "q58_salted_enrichment" -> q58Sql,
-    "q59_latest_per_key" -> q59Sql,
-    "q30_event_window_agg" -> q30Sql,
-    "q31_sessionize" -> q31Sql,
-    "q111_session_window" -> q111Sql,
-    "q112_resample_ffill" -> q112Sql,
-    "q118_winsorize" -> q118Sql,
-    "q119_robust_stats" -> q119Sql,
-    "q32_event_dedup" -> q32Sql,
-    "q33_asof_attribution" -> q33Sql,
-    "q35_json_extract" -> q35Sql,
-    "q36_range_join_campaigns" -> q36Sql,
-    "q56_interval_overlap" -> q56Sql,
-    "q38_trailing_window" -> q38Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q70_partition_pruning", q70PartitionPruning _, q70Sql),
+    Query("q120_orc_lake", q120OrcLake _, q120Sql),
+    Query("q121_zorder_key", q121ZorderKey _, q121Sql),
+    Query("q122_cdc_merge", q122CdcMerge _, q122Sql),
+    Query("q123_scd2", q123Scd2 _, q123Sql),
+    Query("q124_compaction_plan", q124CompactionPlan _, q124Sql),
+    Query("q125_skipping_manifest", q125SkippingManifest _, q125Sql),
+    Query("q131_dirty_window_recompute", q131DirtyWindowRecompute _, q131Sql),
+    Query("q170_value_histogram", q170ValueHistogram _, q170Sql),
+    Query("q171_funnel", q171Funnel _, q171Sql),
+    Query("q68_window_showcase", q68WindowShowcase _, q68Sql),
+    Query("q65_funnel", q65Funnel _, q65Sql),
+    Query("q58_salted_enrichment", q58SaltedEnrichment _, q58Sql),
+    Query("q59_latest_per_key", q59LatestPerKey _, q59Sql),
+    Query("q30_event_window_agg", q30WindowAgg _, q30Sql),
+    Query("q31_sessionize", q31Sessionize _, q31Sql),
+    Query("q111_session_window", q111SessionWindow _, q111Sql),
+    Query("q112_resample_ffill", q112ResampleFfill _, q112Sql),
+    Query("q118_winsorize", q118Winsorize _, q118Sql),
+    Query("q119_robust_stats", q119RobustStats _, q119Sql),
+    Query("q32_event_dedup", q32EventDedup _, q32Sql),
+    Query("q33_asof_attribution", q33AsofAttribution _, q33Sql),
+    Query("q35_json_extract", q35JsonExtract _, q35Sql),
+    Query("q36_range_join_campaigns", q36RangeJoinCampaigns _, q36Sql),
+    Query("q56_interval_overlap", q56IntervalOverlap _, q56Sql),
+    Query("q38_trailing_window", q38TrailingWindow _, q38Sql),
   )
 }

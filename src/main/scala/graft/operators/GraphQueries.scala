@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.graph.GraphOps
 
@@ -308,21 +309,12 @@ object GraphQueries {
        |SELECT id AS doc_id, d AS dist FROM v$SsspRounds ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_pagerank" -> (q101PageRank _),
-    "q109_personalized_pagerank" -> (q109PersonalizedPageRank _),
-    "q110_label_propagation" -> (q110LabelPropagation _),
-    "q136_kcore" -> (q136KCore _),
-    "q149_bfs_depth" -> (q149BfsDepth _),
-    "q223_sssp" -> (q223Sssp _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q101_pagerank" -> q101Sql,
-    "q109_personalized_pagerank" -> q109Sql,
-    "q110_label_propagation" -> q110Sql,
-    "q136_kcore" -> q136Sql,
-    "q149_bfs_depth" -> q149Sql,
-    "q223_sssp" -> q223Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q101_pagerank", q101PageRank _, q101Sql),
+    Query("q109_personalized_pagerank", q109PersonalizedPageRank _, q109Sql),
+    Query("q110_label_propagation", q110LabelPropagation _, q110Sql),
+    Query("q136_kcore", q136KCore _, q136Sql),
+    Query("q149_bfs_depth", q149BfsDepth _, q149Sql),
+    Query("q223_sssp", q223Sssp _, q223Sql),
   )
 }

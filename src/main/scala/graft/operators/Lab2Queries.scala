@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.app.Lab2Pipeline
 
 /** Driver-gated queries over the papers FIXTURE through
@@ -134,13 +135,8 @@ object Lab2Queries {
        |       CAST((SELECT n FROM nn) AS BIGINT) AS n
        |FROM best WHERE rk = 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q54_lab2_matches" -> (q54Lab2Matches _),
-    "q55_lab2_accuracy" -> (q55Lab2Accuracy _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q54_lab2_matches" -> q54Sql,
-    "q55_lab2_accuracy" -> q55Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q54_lab2_matches", q54Lab2Matches _, q54Sql),
+    Query("q55_lab2_accuracy", q55Lab2Accuracy _, q55Sql),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.multimodal.Multimodal
 
@@ -146,15 +147,10 @@ object MultimodalQueries {
       |  t(name, sample_rate, bits, duration_ms, channels)
       |ORDER BY name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q40_media_metadata" -> (q40MediaMetadata _),
-    "q41_media_feature_rollup" -> (q41MediaFeatureRollup _),
-    "q45_media_decode" -> (q45MediaDecode _),
-    "q132_audio_decode" -> (q132AudioDecode _))
-
-  val oracles: Map[String, String] = Map(
-    "q40_media_metadata" -> q40Sql,
-    "q41_media_feature_rollup" -> q41Sql,
-    "q45_media_decode" -> q45Sql,
-    "q132_audio_decode" -> q132Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q40_media_metadata", q40MediaMetadata _, q40Sql),
+    Query("q41_media_feature_rollup", q41MediaFeatureRollup _, q41Sql),
+    Query("q45_media_decode", q45MediaDecode _, q45Sql),
+    Query("q132_audio_decode", q132AudioDecode _, q132Sql),
+  )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Core relational operator coverage (SURVEY.md §2.2, §2.5–§2.7):
@@ -1290,67 +1291,35 @@ object RelationalOps {
       .drop("__gr_pid", "__gr_rn", "__gr_off")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q90_top_supplier" -> (q90TopSupplier _),
-    "q84_small_qty_revenue" -> (q84SmallQuantityRevenue _),
-    "q85_disjunctive_revenue" -> (q85DisjunctiveRevenue _),
-    "q86_market_share" -> (q86MarketShare _),
-    "q81_volume_shipping" -> (q81VolumeShipping _),
-    "q82_waiting_suppliers" -> (q82WaitingSuppliers _),
-    "q83_order_count_distribution" -> (q83OrderCountDistribution _),
-    "q79_local_supplier_revenue" -> (q79LocalSupplierRevenue _),
-    "q80_returned_item_customers" -> (q80ReturnedItemCustomers _),
-    "q77_order_priority_check" -> (q77OrderPriorityCheck _),
-    "q73_promo_revenue" -> (q73PromoRevenue _),
-    "q74_supplier_breadth" -> (q74SupplierBreadth _),
-    "q75_dormant_customers" -> (q75DormantCustomers _),
-    "q69_bucketed_join" -> (q69BucketedJoin _),
-    "q63_large_orders" -> (q63LargeOrders _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q2_revenue_by_nation" -> (q2RevenueByNation _),
-    "q3_top_orders_per_segment" -> (q3TopOrdersPerSegment _),
-    "q57_shipping_priority" -> (q57ShippingPriority _),
-    "q4_status_pivot_by_region" -> (q4StatusPivotByRegion _),
-    "q173_unpivot_roundtrip" -> (q173UnpivotRoundtrip _),
-    "q174_lateral_topn" -> (q174LateralTopN _),
-    "q5_semi_anti" -> (q5SemiAnti _),
-    "q6_point_lookup" -> (q6PointLookup _),
-    "q7_set_ops" -> (q7SetOps _),
-    "q8_rollup" -> (q8Rollup _),
-    "q9_sql_correlated" -> (q9SqlCorrelated _),
-    "q34_percentiles" -> (q34Percentiles _),
-    "q39_cube" -> (q39Cube _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q90_top_supplier" -> q90Sql,
-    "q84_small_qty_revenue" -> q84Sql,
-    "q85_disjunctive_revenue" -> q85Sql,
-    "q86_market_share" -> q86Sql,
-    "q81_volume_shipping" -> q81Sql,
-    "q82_waiting_suppliers" -> q82Sql,
-    "q83_order_count_distribution" -> q83Sql,
-    "q79_local_supplier_revenue" -> q79Sql,
-    "q80_returned_item_customers" -> q80Sql,
-    "q77_order_priority_check" -> q77Sql,
-    "q73_promo_revenue" -> q73Sql,
-    "q74_supplier_breadth" -> q74Sql,
-    "q75_dormant_customers" -> q75Sql,
-    "q69_bucketed_join" -> q69Sql,
-    "q63_large_orders" -> q63Sql,
-    "q1_pricing_summary" -> q1Sql,
-    "q2_revenue_by_nation" -> q2Sql,
-    "q3_top_orders_per_segment" -> q3Sql,
-    "q57_shipping_priority" -> q57Sql,
-    "q4_status_pivot_by_region" -> q4Sql,
-    "q173_unpivot_roundtrip" -> q173Sql,
-    "q174_lateral_topn" -> q174Sql,
-    "q5_semi_anti" -> q5Sql,
-    "q6_point_lookup" -> q6Sql,
-    "q7_set_ops" -> q7Sql,
-    "q8_rollup" -> q8Sql,
-    "q9_sql_correlated" -> q9Sql,
-    "q34_percentiles" -> q34Sql,
-    "q39_cube" -> q39Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q90_top_supplier", q90TopSupplier _, q90Sql),
+    Query("q84_small_qty_revenue", q84SmallQuantityRevenue _, q84Sql),
+    Query("q85_disjunctive_revenue", q85DisjunctiveRevenue _, q85Sql),
+    Query("q86_market_share", q86MarketShare _, q86Sql),
+    Query("q81_volume_shipping", q81VolumeShipping _, q81Sql),
+    Query("q82_waiting_suppliers", q82WaitingSuppliers _, q82Sql),
+    Query("q83_order_count_distribution", q83OrderCountDistribution _, q83Sql),
+    Query("q79_local_supplier_revenue", q79LocalSupplierRevenue _, q79Sql),
+    Query("q80_returned_item_customers", q80ReturnedItemCustomers _, q80Sql),
+    Query("q77_order_priority_check", q77OrderPriorityCheck _, q77Sql),
+    Query("q73_promo_revenue", q73PromoRevenue _, q73Sql),
+    Query("q74_supplier_breadth", q74SupplierBreadth _, q74Sql),
+    Query("q75_dormant_customers", q75DormantCustomers _, q75Sql),
+    Query("q69_bucketed_join", q69BucketedJoin _, q69Sql),
+    Query("q63_large_orders", q63LargeOrders _, q63Sql),
+    Query("q1_pricing_summary", q1PricingSummary _, q1Sql),
+    Query("q2_revenue_by_nation", q2RevenueByNation _, q2Sql),
+    Query("q3_top_orders_per_segment", q3TopOrdersPerSegment _, q3Sql),
+    Query("q57_shipping_priority", q57ShippingPriority _, q57Sql),
+    Query("q4_status_pivot_by_region", q4StatusPivotByRegion _, q4Sql),
+    Query("q173_unpivot_roundtrip", q173UnpivotRoundtrip _, q173Sql),
+    Query("q174_lateral_topn", q174LateralTopN _, q174Sql),
+    Query("q5_semi_anti", q5SemiAnti _, q5Sql),
+    Query("q6_point_lookup", q6PointLookup _, q6Sql),
+    Query("q7_set_ops", q7SetOps _, q7Sql),
+    Query("q8_rollup", q8Rollup _, q8Sql),
+    Query("q9_sql_correlated", q9SqlCorrelated _, q9Sql),
+    Query("q34_percentiles", q34Percentiles _, q34Sql),
+    Query("q39_cube", q39Cube _, q39Sql),
   )
 }

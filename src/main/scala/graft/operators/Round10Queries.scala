@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Round-10 additions (driver round 4, batch 11): the exact-distinct
@@ -700,29 +701,16 @@ object Round10Queries {
       |       count(*) AS n_purchases
       |FROM p GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q196_bitmap_distinct" -> (q196BitmapDistinct _),
-    "q197_pit_join" -> (q197PitJoin _),
-    "q198_attribution" -> (q198Attribution _),
-    "q199_streaks" -> (q199Streaks _),
-    "q200_ab_test" -> (q200AbTest _),
-    "q201_percentile_within" -> (q201PercentileWithin _),
-    "q202_interval_union" -> (q202IntervalUnion _),
-    "q203_peak_concurrency" -> (q203PeakConcurrency _),
-    "q204_basket_lift" -> (q204BasketLift _),
-    "q205_cusum_drift" -> (q205CusumDrift _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q196_bitmap_distinct" -> q196Sql,
-    "q197_pit_join" -> q197Sql,
-    "q198_attribution" -> q198Sql,
-    "q199_streaks" -> q199Sql,
-    "q200_ab_test" -> q200Sql,
-    "q201_percentile_within" -> q201Sql,
-    "q202_interval_union" -> q202Sql,
-    "q203_peak_concurrency" -> q203Sql,
-    "q204_basket_lift" -> q204Sql,
-    "q205_cusum_drift" -> q205Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q196_bitmap_distinct", q196BitmapDistinct _, q196Sql),
+    Query("q197_pit_join", q197PitJoin _, q197Sql),
+    Query("q198_attribution", q198Attribution _, q198Sql),
+    Query("q199_streaks", q199Streaks _, q199Sql),
+    Query("q200_ab_test", q200AbTest _, q200Sql),
+    Query("q201_percentile_within", q201PercentileWithin _, q201Sql),
+    Query("q202_interval_union", q202IntervalUnion _, q202Sql),
+    Query("q203_peak_concurrency", q203PeakConcurrency _, q203Sql),
+    Query("q204_basket_lift", q204BasketLift _, q204Sql),
+    Query("q205_cusum_drift", q205CusumDrift _, q205Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Round-11 additions (driver round 4, batch 13): the last big physical
@@ -383,17 +384,11 @@ object Round11Queries {
       |ORDER BY d.bucket""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q206_dynamic_pruning" -> (q206DynamicPruning _),
-    "q207_ks_test" -> (q207KsTest _),
-    "q208_try_ingest" -> (q208TryIngest _),
-    "q209_weighted_median" -> (q209WeightedMedian _),
-    "q210_merkle_diff" -> (q210MerkleDiff _))
-
-  val oracles: Map[String, String] = Map(
-    "q206_dynamic_pruning" -> q206Sql,
-    "q207_ks_test" -> q207Sql,
-    "q208_try_ingest" -> q208Sql,
-    "q209_weighted_median" -> q209Sql,
-    "q210_merkle_diff" -> q210Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q206_dynamic_pruning", q206DynamicPruning _, q206Sql),
+    Query("q207_ks_test", q207KsTest _, q207Sql),
+    Query("q208_try_ingest", q208TryIngest _, q208Sql),
+    Query("q209_weighted_median", q209WeightedMedian _, q209Sql),
+    Query("q210_merkle_diff", q210MerkleDiff _, q210Sql),
+  )
 }

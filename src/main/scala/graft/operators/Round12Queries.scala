@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.dedup.Dedup
 
@@ -732,25 +733,15 @@ object Round12Queries {
     Tables.events(s, dir).withColumn("ts_us", unix_micros(col("ts")))
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q211_setsim_join" -> (q211SetSimJoin _),
-    "q225_sql_setsim" -> (q225SqlSetSim _),
-    "q212_dictionary_match" -> (q212DictionaryMatch _),
-    "q213_heavy_hitters" -> (q213HeavyHitters _),
-    "q214_rendezvous_shards" -> (q214RendezvousShards _),
-    "q215_skyline" -> (q215Skyline _),
-    "q216_positional_index" -> (q216PositionalIndex _),
-    "q217_nearest_event" -> (q217NearestEvent _),
-    "q218_grouped_trend" -> (q218GroupedTrend _))
-
-  val oracles: Map[String, String] = Map(
-    "q211_setsim_join" -> q211Sql,
-    "q225_sql_setsim" -> q225Sql,
-    "q212_dictionary_match" -> q212Sql,
-    "q213_heavy_hitters" -> q213Sql,
-    "q214_rendezvous_shards" -> q214Sql,
-    "q215_skyline" -> q215Sql,
-    "q216_positional_index" -> q216Sql,
-    "q217_nearest_event" -> q217Sql,
-    "q218_grouped_trend" -> q218Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q211_setsim_join", q211SetSimJoin _, q211Sql),
+    Query("q225_sql_setsim", q225SqlSetSim _, q225Sql),
+    Query("q212_dictionary_match", q212DictionaryMatch _, q212Sql),
+    Query("q213_heavy_hitters", q213HeavyHitters _, q213Sql),
+    Query("q214_rendezvous_shards", q214RendezvousShards _, q214Sql),
+    Query("q215_skyline", q215Skyline _, q215Sql),
+    Query("q216_positional_index", q216PositionalIndex _, q216Sql),
+    Query("q217_nearest_event", q217NearestEvent _, q217Sql),
+    Query("q218_grouped_trend", q218GroupedTrend _, q218Sql),
+  )
 }

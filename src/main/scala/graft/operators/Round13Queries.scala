@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Round-13 additions (driver round 5, batch 14): bitemporal as-of
@@ -422,17 +423,11 @@ object Round13Queries {
        |ORDER BY c.a, c.b""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q219_bitemporal_asof" -> (q219BitemporalAsOf _),
-    "q220_column_diff" -> (q220ColumnDiff _),
-    "q221_seasonal_decomposition" -> (q221SeasonalDecomposition _),
-    "q222_sequence_match" -> (q222SequenceMatch _),
-    "q224_containment_join" -> (q224ContainmentJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "q219_bitemporal_asof" -> q219Sql,
-    "q220_column_diff" -> q220Sql,
-    "q221_seasonal_decomposition" -> q221Sql,
-    "q222_sequence_match" -> q222Sql,
-    "q224_containment_join" -> q224Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q219_bitemporal_asof", q219BitemporalAsOf _, q219Sql),
+    Query("q220_column_diff", q220ColumnDiff _, q220Sql),
+    Query("q221_seasonal_decomposition", q221SeasonalDecomposition _, q221Sql),
+    Query("q222_sequence_match", q222SequenceMatch _, q222Sql),
+    Query("q224_containment_join", q224ContainmentJoin _, q224Sql),
+  )
 }

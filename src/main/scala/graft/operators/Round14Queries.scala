@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.Tables
 import graft.functions.VectorFunctions
 import graft.text.TextPrep
@@ -1235,33 +1236,19 @@ object Round14Queries {
        |                0.0) AS mrr""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q231_image_dhash_dedup" -> (q231ImageDhashDedup _),
-    "q234_sql_dhash" -> (q234SqlDhash _),
-    "q235_jackknife" -> (q235Jackknife _),
-    "q236_bitext_margin" -> (q236BitextMargin _),
-    "q238_bitext_blocked" -> (q238BitextBlocked _),
-    "q239_threshold_select" -> (q239ThresholdSelect _),
-    "q240_rm3_expansion" -> (q240Rm3Expansion _),
-    "q241_ranking_eval" -> (q241RankingEval _),
-    "q226_bm25" -> (q226Bm25 _),
-    "q227_rouge2" -> (q227Rouge2 _),
-    "q228_mmr" -> (q228Mmr _),
-    "q229_roc_auc" -> (q229RocAuc _),
-    "q230_calibration_bins" -> (q230CalibrationBins _))
-
-  val oracles: Map[String, String] = Map(
-    "q231_image_dhash_dedup" -> q231Sql,
-    "q234_sql_dhash" -> q231Sql,
-    "q235_jackknife" -> q235Sql,
-    "q236_bitext_margin" -> q236Sql,
-    "q238_bitext_blocked" -> q238Sql,
-    "q239_threshold_select" -> q239Sql,
-    "q240_rm3_expansion" -> q240Sql,
-    "q241_ranking_eval" -> q241Sql,
-    "q226_bm25" -> q226Sql,
-    "q227_rouge2" -> q227Sql,
-    "q228_mmr" -> q228Sql,
-    "q229_roc_auc" -> q229Sql,
-    "q230_calibration_bins" -> q230Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q231_image_dhash_dedup", q231ImageDhashDedup _, q231Sql),
+    Query("q234_sql_dhash", q234SqlDhash _, q231Sql),
+    Query("q235_jackknife", q235Jackknife _, q235Sql),
+    Query("q236_bitext_margin", q236BitextMargin _, q236Sql),
+    Query("q238_bitext_blocked", q238BitextBlocked _, q238Sql),
+    Query("q239_threshold_select", q239ThresholdSelect _, q239Sql),
+    Query("q240_rm3_expansion", q240Rm3Expansion _, q240Sql),
+    Query("q241_ranking_eval", q241RankingEval _, q241Sql),
+    Query("q226_bm25", q226Bm25 _, q226Sql),
+    Query("q227_rouge2", q227Rouge2 _, q227Sql),
+    Query("q228_mmr", q228Mmr _, q228Sql),
+    Query("q229_roc_auc", q229RocAuc _, q229Sql),
+    Query("q230_calibration_bins", q230CalibrationBins _, q230Sql),
+  )
 }

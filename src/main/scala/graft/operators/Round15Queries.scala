@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.text.TextPrep
 
@@ -1920,25 +1921,16 @@ object Round15Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q244_multi_bm25" -> (q244MultiBm25 _),
-    "q246_sql_bm25" -> (q246SqlBm25 _),
-    "q248_multi_query_ndcg" -> (q248MultiQueryNdcg _),
-    "q253_sql_multi_bm25" -> (q253SqlMultiBm25 _),
-    "q271_bm25_params_auto" -> (q271Bm25ParamsAuto _),
-    "q273_bm25_params_persist" -> (q273Bm25ParamsPersist _),
-    "q281_bm25_index_serve" -> (q281Bm25IndexServe _),
-    "q283_bm25_delete_serve" -> (q283Bm25DeleteServe _))
-
-  val oracles: Map[String, String] = Map(
-    "q244_multi_bm25" -> q244Sql,
-    "q246_sql_bm25" -> q246Sql,
-    "q248_multi_query_ndcg" -> q248Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q244_multi_bm25", q244MultiBm25 _, q244Sql),
+    Query("q246_sql_bm25", q246SqlBm25 _, q246Sql),
+    Query("q248_multi_query_ndcg", q248MultiQueryNdcg _, q248Sql),
     // q253 IS q244 at the SQL surface — identical result contract,
     // so the oracle is shared (the q225/q211 convention)
-    "q253_sql_multi_bm25" -> q244Sql,
-    "q271_bm25_params_auto" -> q271Sql,
-    "q273_bm25_params_persist" -> q273Sql,
-    "q281_bm25_index_serve" -> q281Sql,
-    "q283_bm25_delete_serve" -> q283Sql)
+    Query("q253_sql_multi_bm25", q253SqlMultiBm25 _, q244Sql),
+    Query("q271_bm25_params_auto", q271Bm25ParamsAuto _, q271Sql),
+    Query("q273_bm25_params_persist", q273Bm25ParamsPersist _, q273Sql),
+    Query("q281_bm25_index_serve", q281Bm25IndexServe _, q281Sql),
+    Query("q283_bm25_delete_serve", q283Bm25DeleteServe _, q283Sql),
+  )
 }

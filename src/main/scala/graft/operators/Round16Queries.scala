@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.text.TextPrep
 
@@ -365,15 +366,10 @@ object Round16Queries {
        |ORDER BY p.doc_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q255_dsir_weights" -> (q255DsirWeights _),
-    "q256_rrf_fusion" -> (q256RrfFusion _),
-    "q257_passage_dedup" -> (q257PassageDedup _),
-    "q261_self_bleu" -> (q261SelfBleu _))
-
-  val oracles: Map[String, String] = Map(
-    "q255_dsir_weights" -> q255Sql,
-    "q256_rrf_fusion" -> q256Sql,
-    "q257_passage_dedup" -> q257Sql,
-    "q261_self_bleu" -> q261Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q255_dsir_weights", q255DsirWeights _, q255Sql),
+    Query("q256_rrf_fusion", q256RrfFusion _, q256Sql),
+    Query("q257_passage_dedup", q257PassageDedup _, q257Sql),
+    Query("q261_self_bleu", q261SelfBleu _, q261Sql),
+  )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.ann.Ann
 import graft.io.SizedWrite.SizedWriteOps
@@ -1198,27 +1199,16 @@ object Round17Queries {
        |FROM vols v LEFT JOIN vocab vc USING (lang, source)
        |ORDER BY v.lang, v.source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q278_choice_staleness_audit" -> (q278ChoiceStalenessAudit _),
-    "q280_corpus_ingest_cycle" -> (q280CorpusIngestCycle _),
-    "q282_postings_append_cycle" -> (q282PostingsAppendCycle _),
-    "q284_postings_maintenance_cycle" -> (q284PostingsMaintenanceCycle _),
-    "q285_snapshot_read" -> (q285SnapshotRead _),
-    "q286_snapshot_delta" -> (q286SnapshotDelta _),
-    "q288_split_assign" -> (q288SplitAssign _),
-    "q289_leakfree_split" -> (q289LeakFreeSplit _),
-    "q290_asof_serve" -> (q290AsOfServe _),
-    "q291_dataset_card" -> (q291DatasetCard _))
-
-  def oraclesFor(sfDir: String): Map[String, String] = Map(
-    "q278_choice_staleness_audit" -> q278SqlFor(sfDir),
-    "q280_corpus_ingest_cycle" -> q280SqlFor(sfDir),
-    "q282_postings_append_cycle" -> q282Sql,
-    "q284_postings_maintenance_cycle" -> q284Sql,
-    "q285_snapshot_read" -> q285Sql,
-    "q286_snapshot_delta" -> q286Sql,
-    "q288_split_assign" -> q288Sql,
-    "q289_leakfree_split" -> q289Sql,
-    "q290_asof_serve" -> q290Sql,
-    "q291_dataset_card" -> q291Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q278_choice_staleness_audit", q278ChoiceStalenessAudit _, q278SqlFor _),
+    Query("q280_corpus_ingest_cycle", q280CorpusIngestCycle _, q280SqlFor _),
+    Query("q282_postings_append_cycle", q282PostingsAppendCycle _, q282Sql),
+    Query("q284_postings_maintenance_cycle", q284PostingsMaintenanceCycle _, q284Sql),
+    Query("q285_snapshot_read", q285SnapshotRead _, q285Sql),
+    Query("q286_snapshot_delta", q286SnapshotDelta _, q286Sql),
+    Query("q288_split_assign", q288SplitAssign _, q288Sql),
+    Query("q289_leakfree_split", q289LeakFreeSplit _, q289Sql),
+    Query("q290_asof_serve", q290AsOfServe _, q290Sql),
+    Query("q291_dataset_card", q291DatasetCard _, q291Sql),
+  )
 }

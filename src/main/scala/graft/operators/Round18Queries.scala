@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.io.SizedWrite.SizedWriteOps
 
@@ -1360,27 +1361,16 @@ object Round18Queries {
        |ORDER BY query_id, rk""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q292_maskeddf_artifact_cycle" -> (q292MaskedDfArtifactCycle _),
-    "q293_retained_compaction" -> (q293RetainedCompaction _),
-    "q294_snapshot_cursor_catchup" -> (q294SnapshotCursorCatchup _),
-    "q295_incremental_card" -> (q295IncrementalCard _),
-    "q296_sql_asof" -> (q296SqlAsOf _),
-    "q298_retention_policy" -> (q298RetentionPolicy _),
-    "q299_card_crash_discipline" -> (q299CardCrashDiscipline _),
-    "q300_retained_maintenance_cycle" -> (q300RetainedMaintenanceCycle _),
-    "q301_bucket_dial_auto" -> (q301BucketDialAuto _),
-    "q302_sql_masked_serve" -> (q302SqlMaskedServe _))
-
-  val oracles: Map[String, String] = Map(
-    "q292_maskeddf_artifact_cycle" -> q292Sql,
-    "q293_retained_compaction" -> q293Sql,
-    "q294_snapshot_cursor_catchup" -> q294Sql,
-    "q295_incremental_card" -> q295Sql,
-    "q296_sql_asof" -> q296Sql,
-    "q298_retention_policy" -> q298Sql,
-    "q299_card_crash_discipline" -> q299Sql,
-    "q300_retained_maintenance_cycle" -> q300Sql,
-    "q301_bucket_dial_auto" -> q301Sql,
-    "q302_sql_masked_serve" -> q302Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q292_maskeddf_artifact_cycle", q292MaskedDfArtifactCycle _, q292Sql),
+    Query("q293_retained_compaction", q293RetainedCompaction _, q293Sql),
+    Query("q294_snapshot_cursor_catchup", q294SnapshotCursorCatchup _, q294Sql),
+    Query("q295_incremental_card", q295IncrementalCard _, q295Sql),
+    Query("q296_sql_asof", q296SqlAsOf _, q296Sql),
+    Query("q298_retention_policy", q298RetentionPolicy _, q298Sql),
+    Query("q299_card_crash_discipline", q299CardCrashDiscipline _, q299Sql),
+    Query("q300_retained_maintenance_cycle", q300RetainedMaintenanceCycle _, q300Sql),
+    Query("q301_bucket_dial_auto", q301BucketDialAuto _, q301Sql),
+    Query("q302_sql_masked_serve", q302SqlMaskedServe _, q302Sql),
+  )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.io.SizedWrite.SizedWriteOps
 
@@ -895,23 +896,14 @@ object Round19Queries {
     sql
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q303_age_retention_policy" -> (q303AgeRetentionPolicy _),
-    "q304_maskeddf_alternation" -> (q304MaskedDfAlternation _),
-    "q305_asof_card" -> (q305AsOfCard _),
-    "q306_sql_card" -> (q306SqlCard _),
-    "q307_card_ingest_cycle" -> (q307CardIngestCycle _),
-    "q308_card_drift" -> (q308CardDrift _),
-    "q309_sql_drift" -> (q309SqlDrift _),
-    "q310_age_retained_cycle" -> (q310AgeRetainedMaintenanceCycle _))
-
-  val oracles: Map[String, String] = Map(
-    "q303_age_retention_policy" -> q303Sql,
-    "q304_maskeddf_alternation" -> q304Sql,
-    "q305_asof_card" -> q305Sql,
-    "q306_sql_card" -> q306Sql,
-    "q307_card_ingest_cycle" -> q307Sql,
-    "q308_card_drift" -> q308Sql,
-    "q309_sql_drift" -> q309Sql,
-    "q310_age_retained_cycle" -> q310Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q303_age_retention_policy", q303AgeRetentionPolicy _, q303Sql),
+    Query("q304_maskeddf_alternation", q304MaskedDfAlternation _, q304Sql),
+    Query("q305_asof_card", q305AsOfCard _, q305Sql),
+    Query("q306_sql_card", q306SqlCard _, q306Sql),
+    Query("q307_card_ingest_cycle", q307CardIngestCycle _, q307Sql),
+    Query("q308_card_drift", q308CardDrift _, q308Sql),
+    Query("q309_sql_drift", q309SqlDrift _, q309Sql),
+    Query("q310_age_retained_cycle", q310AgeRetainedMaintenanceCycle _, q310Sql),
+  )
 }

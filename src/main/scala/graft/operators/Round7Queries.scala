@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Round-7 additions: approximate string record linkage, information-
@@ -809,37 +810,21 @@ object Round7Queries {
       |SELECT status, CAST(count(*) AS BIGINT) AS n
       |FROM d GROUP BY status ORDER BY status""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q137_fuzzy_part_linkage" -> (q137FuzzyPartLinkage _),
-    "q138_char_entropy" -> (q138CharEntropy _),
-    "q139_quality_report" -> (q139QualityReport _),
-    "q140_bigram_lm" -> (q140BigramLm _),
-    "q141_jl_projection" -> (q141JlProjection _),
-    "q142_fk_audit" -> (q142FkAudit _),
-    "q143_bloom_pruned_revenue" -> (q143BloomPrunedRevenue _),
-    "q144_trigram_novelty" -> (q144TrigramNovelty _),
-    "q145_conjunctive_search" -> (q145ConjunctiveSearch _),
-    "q146_phrase_search" -> (q146PhraseSearch _),
-    "q147_pii_redaction" -> (q147PiiRedaction _),
-    "q148_join_ivm" -> (q148JoinIvm _),
-    "q150_pmi_collocations" -> (q150PmiCollocations _),
-    "q151_source_kl_drift" -> (q151SourceKlDrift _),
-    "q152_snapshot_diff" -> (q152SnapshotDiff _))
-
-  val oracles: Map[String, String] = Map(
-    "q137_fuzzy_part_linkage" -> q137Sql,
-    "q138_char_entropy" -> q138Sql,
-    "q139_quality_report" -> q139Sql,
-    "q140_bigram_lm" -> q140Sql,
-    "q141_jl_projection" -> q141Sql,
-    "q142_fk_audit" -> q142Sql,
-    "q143_bloom_pruned_revenue" -> q143Sql,
-    "q144_trigram_novelty" -> q144Sql,
-    "q145_conjunctive_search" -> q145Sql,
-    "q146_phrase_search" -> q146Sql,
-    "q147_pii_redaction" -> q147Sql,
-    "q148_join_ivm" -> q148Sql,
-    "q150_pmi_collocations" -> q150Sql,
-    "q151_source_kl_drift" -> q151Sql,
-    "q152_snapshot_diff" -> q152Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q137_fuzzy_part_linkage", q137FuzzyPartLinkage _, q137Sql),
+    Query("q138_char_entropy", q138CharEntropy _, q138Sql),
+    Query("q139_quality_report", q139QualityReport _, q139Sql),
+    Query("q140_bigram_lm", q140BigramLm _, q140Sql),
+    Query("q141_jl_projection", q141JlProjection _, q141Sql),
+    Query("q142_fk_audit", q142FkAudit _, q142Sql),
+    Query("q143_bloom_pruned_revenue", q143BloomPrunedRevenue _, q143Sql),
+    Query("q144_trigram_novelty", q144TrigramNovelty _, q144Sql),
+    Query("q145_conjunctive_search", q145ConjunctiveSearch _, q145Sql),
+    Query("q146_phrase_search", q146PhraseSearch _, q146Sql),
+    Query("q147_pii_redaction", q147PiiRedaction _, q147Sql),
+    Query("q148_join_ivm", q148JoinIvm _, q148Sql),
+    Query("q150_pmi_collocations", q150PmiCollocations _, q150Sql),
+    Query("q151_source_kl_drift", q151SourceKlDrift _, q151Sql),
+    Query("q152_snapshot_diff", q152SnapshotDiff _, q152Sql),
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Round-8 additions (driver round 4, batch 5): exact-substring
@@ -926,35 +927,20 @@ object Round8Queries {
        |  END AS rep_micro
        |FROM per_doc GROUP BY source ORDER BY source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q153_exact_substr_spans" -> (q153ExactSubstrSpans _),
-    "q154_embedding_covariance" -> (q154EmbeddingCovariance _),
-    "q155_hard_negatives" -> (q155HardNegatives _),
-    "q157_shard_plan" -> (q157ShardPlan _),
-    "q158_video_frame_sample" -> (q158VideoFrameSample _),
-    "q159_k_anonymity" -> (q159KAnonymity _),
-    "q160_domain_rollup" -> (q160DomainRollup _),
-    "q161_skew_audit" -> (q161SkewAudit _),
-    "q162_sentence_stats" -> (q162SentenceStats _),
-    "q163_power_iteration" -> (q163PowerIteration _),
-    "q164_variant_extract" -> (q164VariantExtract _),
-    "q165_budget_apportion" -> (q165BudgetApportion _),
-    "q166_chi_square_drift" -> (q166ChiSquareDrift _),
-    "q168_intra_doc_repetition" -> (q168IntraDocRepetition _))
-
-  val oracles: Map[String, String] = Map(
-    "q153_exact_substr_spans" -> q153Sql,
-    "q154_embedding_covariance" -> q154Sql,
-    "q155_hard_negatives" -> q155Sql,
-    "q157_shard_plan" -> q157Sql,
-    "q158_video_frame_sample" -> q158Sql,
-    "q159_k_anonymity" -> q159Sql,
-    "q160_domain_rollup" -> q160Sql,
-    "q161_skew_audit" -> q161Sql,
-    "q162_sentence_stats" -> q162Sql,
-    "q163_power_iteration" -> q163Sql,
-    "q164_variant_extract" -> q164Sql,
-    "q165_budget_apportion" -> q165Sql,
-    "q166_chi_square_drift" -> q166Sql,
-    "q168_intra_doc_repetition" -> q168Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q153_exact_substr_spans", q153ExactSubstrSpans _, q153Sql),
+    Query("q154_embedding_covariance", q154EmbeddingCovariance _, q154Sql),
+    Query("q155_hard_negatives", q155HardNegatives _, q155Sql),
+    Query("q157_shard_plan", q157ShardPlan _, q157Sql),
+    Query("q158_video_frame_sample", q158VideoFrameSample _, q158Sql),
+    Query("q159_k_anonymity", q159KAnonymity _, q159Sql),
+    Query("q160_domain_rollup", q160DomainRollup _, q160Sql),
+    Query("q161_skew_audit", q161SkewAudit _, q161Sql),
+    Query("q162_sentence_stats", q162SentenceStats _, q162Sql),
+    Query("q163_power_iteration", q163PowerIteration _, q163Sql),
+    Query("q164_variant_extract", q164VariantExtract _, q164Sql),
+    Query("q165_budget_apportion", q165BudgetApportion _, q165Sql),
+    Query("q166_chi_square_drift", q166ChiSquareDrift _, q166Sql),
+    Query("q168_intra_doc_repetition", q168IntraDocRepetition _, q168Sql),
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 
 /** Round-9 additions (driver round 4, batch 6): the remaining SQL
@@ -798,49 +799,26 @@ object Round9Queries {
       |         AS corr_qty_price
       |FROM m ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q175_recursive_depth" -> (q175RecursiveDepth _),
-    "q176_lang_signature" -> (q176LangSignature _),
-    "q177_retention_cohorts" -> (q177RetentionCohorts _),
-    "q178_benford" -> (q178Benford _),
-    "q179_transition_matrix" -> (q179TransitionMatrix _),
-    "q180_twap" -> (q180Twap _),
-    "q181_rolling_distinct" -> (q181RollingDistinct _),
-    "q182_sql_udf" -> (q182SqlUdf _),
-    "q183_notin_nullaware" -> (q183NotInNullAware _),
-    "q184_grouping_sets" -> (q184GroupingSets _),
-    "q185_bag_setops" -> (q185BagSetOps _),
-    "q186_scalar_subquery" -> (q186ScalarSubquery _),
-    "q187_ntile_deciles" -> (q187NtileDeciles _),
-    "q188_training_order" -> (q188TrainingOrder _),
-    "q189_nullsafe_diff" -> (q189NullSafeDiff _),
-    "q190_union_by_name" -> (q190UnionByName _),
-    "q191_expectations" -> (q191Expectations _),
-    "q192_cadence_histogram" -> (q192CadenceHistogram _),
-    "q193_topk_with_ties" -> (q193TopKWithTies _),
-    "q195_correlation" -> (q195Correlation _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q175_recursive_depth" -> q175Sql,
-    "q176_lang_signature" -> q176Sql,
-    "q177_retention_cohorts" -> q177Sql,
-    "q178_benford" -> q178Sql,
-    "q179_transition_matrix" -> q179Sql,
-    "q180_twap" -> q180Sql,
-    "q181_rolling_distinct" -> q181Sql,
-    "q182_sql_udf" -> q182Sql,
-    "q183_notin_nullaware" -> q183Sql,
-    "q184_grouping_sets" -> q184Sql,
-    "q185_bag_setops" -> q185Sql,
-    "q186_scalar_subquery" -> q186Sql,
-    "q187_ntile_deciles" -> q187Sql,
-    "q188_training_order" -> q188Sql,
-    "q189_nullsafe_diff" -> q189Sql,
-    "q190_union_by_name" -> q190Sql,
-    "q191_expectations" -> q191Sql,
-    "q192_cadence_histogram" -> q192Sql,
-    "q193_topk_with_ties" -> q193Sql,
-    "q195_correlation" -> q195Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q175_recursive_depth", q175RecursiveDepth _, q175Sql),
+    Query("q176_lang_signature", q176LangSignature _, q176Sql),
+    Query("q177_retention_cohorts", q177RetentionCohorts _, q177Sql),
+    Query("q178_benford", q178Benford _, q178Sql),
+    Query("q179_transition_matrix", q179TransitionMatrix _, q179Sql),
+    Query("q180_twap", q180Twap _, q180Sql),
+    Query("q181_rolling_distinct", q181RollingDistinct _, q181Sql),
+    Query("q182_sql_udf", q182SqlUdf _, q182Sql),
+    Query("q183_notin_nullaware", q183NotInNullAware _, q183Sql),
+    Query("q184_grouping_sets", q184GroupingSets _, q184Sql),
+    Query("q185_bag_setops", q185BagSetOps _, q185Sql),
+    Query("q186_scalar_subquery", q186ScalarSubquery _, q186Sql),
+    Query("q187_ntile_deciles", q187NtileDeciles _, q187Sql),
+    Query("q188_training_order", q188TrainingOrder _, q188Sql),
+    Query("q189_nullsafe_diff", q189NullSafeDiff _, q189Sql),
+    Query("q190_union_by_name", q190UnionByName _, q190Sql),
+    Query("q191_expectations", q191Expectations _, q191Sql),
+    Query("q192_cadence_histogram", q192CadenceHistogram _, q192Sql),
+    Query("q193_topk_with_ties", q193TopKWithTies _, q193Sql),
+    Query("q195_correlation", q195Correlation _, q195Sql),
   )
 }

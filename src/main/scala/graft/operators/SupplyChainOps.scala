@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import RelationalOps.{exactMoneySum, round6}
 
@@ -343,21 +344,12 @@ object SupplyChainOps {
        |ORDER BY s_suppkey""".stripMargin
 
   /** Query + oracle registry contributed by this module. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q91_forecast_revenue" -> (q91ForecastRevenue _),
-    "q92_ship_delay_modes" -> (q92ShipDelayModes _),
-    "q93_product_profit" -> (q93ProductProfit _),
-    "q94_min_cost_supplier" -> (q94MinCostSupplier _),
-    "q95_important_stock" -> (q95ImportantStock _),
-    "q96_concentrated_shippers" -> (q96ConcentratedShippers _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q91_forecast_revenue" -> q91Sql,
-    "q92_ship_delay_modes" -> q92Sql,
-    "q93_product_profit" -> q93Sql,
-    "q94_min_cost_supplier" -> q94Sql,
-    "q95_important_stock" -> q95Sql,
-    "q96_concentrated_shippers" -> q96Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q91_forecast_revenue", q91ForecastRevenue _, q91Sql),
+    Query("q92_ship_delay_modes", q92ShipDelayModes _, q92Sql),
+    Query("q93_product_profit", q93ProductProfit _, q93Sql),
+    Query("q94_min_cost_supplier", q94MinCostSupplier _, q94Sql),
+    Query("q95_important_stock", q95ImportantStock _, q95Sql),
+    Query("q96_concentrated_shippers", q96ConcentratedShippers _, q96Sql),
   )
 }

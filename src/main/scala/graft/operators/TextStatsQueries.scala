@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.text.TextPrep
 import graft.textstats.TextStats
@@ -758,7 +759,8 @@ object TextStatsQueries {
     * identical quantization arithmetic.
     */
   def q135GeoMeanLength(s: SparkSession, dir: String): DataFrame = {
-    s.udf.register("geo_mean1p", udaf(graft.functions.ExactGeoMean))
+    if (!graft.functions.VectorFunctions.registered(s, "geo_mean1p"))
+      s.udf.register("geo_mean1p", udaf(graft.functions.ExactGeoMean))
     Tables.documents(s, dir).createOrReplaceTempView("documents_q135")
     s.sql("""SELECT source, count(*) AS n_docs,
              geo_mean1p(n_chars) AS geo_mean_chars
@@ -1584,69 +1586,36 @@ object TextStatsQueries {
        |       round(sum(f1_micro) / count(*) / 1e6, 6) AS macro_f1
        |FROM f""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q237_agreement_metrics" -> (q237AgreementMetrics _),
-    "q156_tokenizer_fertility" -> (q156TokenizerFertility _),
-    "q167_bpe_decode" -> (q167BpeDecode _),
-    "q169_lang_confusion" -> (q169LangConfusion _),
-    "q97_vocab_growth" -> (q97VocabGrowth _),
-    "q103_temperature_mix" -> (q103TemperatureMix _),
-    "q104_topk_sample" -> (q104TopKSample _),
-    "q113_weighted_sample" -> (q113WeightedSample _),
-    "q114_bpe_merge_step" -> (q114BpeMergeStep _),
-    "q115_bpe_train" -> (q115BpeTrain _),
-    "q126_bpe_encode" -> (q126BpeEncode _),
-    "q127_oov_rate" -> (q127OovRate _),
-    "q129_delete_propagation" -> (q129DeletePropagation _),
-    "q130_incremental_stats" -> (q130IncrementalStats _),
-    "q133_text_lake" -> (q133TextLake _),
-    "q134_schema_evolution" -> (q134SchemaEvolution _),
-    "q135_geo_mean_length" -> (q135GeoMeanLength _),
-    "q88_mixture_weights" -> (q88MixtureWeights _),
-    "q71_repetition_ratios" -> (q71RepetitionRatios _),
-    "q72_token_chunks" -> (q72TokenChunks _),
-    "q60_stratified_sample" -> (q60StratifiedSample _),
-    "q64_length_quartiles" -> (q64LengthQuartiles _),
-    "q48_hash_split" -> (q48HashSplit _),
-    "q25_lang_id" -> (q25LangId _),
-    "q29_curation" -> (q29Curation _),
-    "q37_sequence_packing" -> (q37SequencePacking _),
-    "q42_unigram_logprob" -> (q42UnigramLogprob _),
-    "q26_quality" -> (q26Quality _),
-    "q27_token_counts" -> (q27TokenCounts _),
-    "q28_fingerprints" -> (q28Fingerprints _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q237_agreement_metrics" -> q237Sql,
-    "q156_tokenizer_fertility" -> q156Sql,
-    "q167_bpe_decode" -> q167Sql,
-    "q169_lang_confusion" -> q169Sql,
-    "q97_vocab_growth" -> q97Sql,
-    "q103_temperature_mix" -> q103Sql,
-    "q104_topk_sample" -> q104Sql,
-    "q113_weighted_sample" -> q113Sql,
-    "q114_bpe_merge_step" -> q114Sql,
-    "q115_bpe_train" -> q115Sql,
-    "q126_bpe_encode" -> q126Sql,
-    "q127_oov_rate" -> q127Sql,
-    "q129_delete_propagation" -> q129Sql,
-    "q130_incremental_stats" -> q130Sql,
-    "q133_text_lake" -> q133Sql,
-    "q134_schema_evolution" -> q134Sql,
-    "q135_geo_mean_length" -> q135Sql,
-    "q88_mixture_weights" -> q88Sql,
-    "q71_repetition_ratios" -> q71Sql,
-    "q72_token_chunks" -> q72Sql,
-    "q60_stratified_sample" -> q60Sql,
-    "q64_length_quartiles" -> q64Sql,
-    "q48_hash_split" -> q48Sql,
-    "q25_lang_id" -> q25Sql,
-    "q29_curation" -> q29Sql,
-    "q37_sequence_packing" -> q37Sql,
-    "q42_unigram_logprob" -> q42Sql,
-    "q26_quality" -> q26Sql,
-    "q27_token_counts" -> q27Sql,
-    "q28_fingerprints" -> q28Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q237_agreement_metrics", q237AgreementMetrics _, q237Sql),
+    Query("q156_tokenizer_fertility", q156TokenizerFertility _, q156Sql),
+    Query("q167_bpe_decode", q167BpeDecode _, q167Sql),
+    Query("q169_lang_confusion", q169LangConfusion _, q169Sql),
+    Query("q97_vocab_growth", q97VocabGrowth _, q97Sql),
+    Query("q103_temperature_mix", q103TemperatureMix _, q103Sql),
+    Query("q104_topk_sample", q104TopKSample _, q104Sql),
+    Query("q113_weighted_sample", q113WeightedSample _, q113Sql),
+    Query("q114_bpe_merge_step", q114BpeMergeStep _, q114Sql),
+    Query("q115_bpe_train", q115BpeTrain _, q115Sql),
+    Query("q126_bpe_encode", q126BpeEncode _, q126Sql),
+    Query("q127_oov_rate", q127OovRate _, q127Sql),
+    Query("q129_delete_propagation", q129DeletePropagation _, q129Sql),
+    Query("q130_incremental_stats", q130IncrementalStats _, q130Sql),
+    Query("q133_text_lake", q133TextLake _, q133Sql),
+    Query("q134_schema_evolution", q134SchemaEvolution _, q134Sql),
+    Query("q135_geo_mean_length", q135GeoMeanLength _, q135Sql),
+    Query("q88_mixture_weights", q88MixtureWeights _, q88Sql),
+    Query("q71_repetition_ratios", q71RepetitionRatios _, q71Sql),
+    Query("q72_token_chunks", q72TokenChunks _, q72Sql),
+    Query("q60_stratified_sample", q60StratifiedSample _, q60Sql),
+    Query("q64_length_quartiles", q64LengthQuartiles _, q64Sql),
+    Query("q48_hash_split", q48HashSplit _, q48Sql),
+    Query("q25_lang_id", q25LangId _, q25Sql),
+    Query("q29_curation", q29Curation _, q29Sql),
+    Query("q37_sequence_packing", q37SequencePacking _, q37Sql),
+    Query("q42_unigram_logprob", q42UnigramLogprob _, q42Sql),
+    Query("q26_quality", q26Quality _, q26Sql),
+    Query("q27_token_counts", q27TokenCounts _, q27Sql),
+    Query("q28_fingerprints", q28Fingerprints _, q28Sql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.Tables
 import graft.text.{TextPrep, UnigramLm}
 
@@ -859,21 +860,13 @@ object UnigramQueries {
        |CROSS JOIN dstamp ds
        |ORDER BY t.word""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q266_unigram_vocab" -> (q266UnigramVocab _),
-    "q267_unigram_segment" -> (q267UnigramSegment _),
-    "q269_unigram_encode" -> (q269UnigramEncode _),
-    "q270_unigram_decode" -> (q270UnigramDecode _),
-    "q275_vocab_size_auto" -> (q275VocabSizeAuto _),
-    "q277_vocab_choice_persist" -> (q277VocabChoicePersist _),
-    "q279_vocab_choice_encode" -> (q279VocabChoiceEncode _))
-
-  val oracles: Map[String, String] = Map(
-    "q266_unigram_vocab" -> q266Sql,
-    "q267_unigram_segment" -> q267Sql,
-    "q269_unigram_encode" -> q269Sql,
-    "q270_unigram_decode" -> q270Sql,
-    "q275_vocab_size_auto" -> q275Sql,
-    "q277_vocab_choice_persist" -> q277Sql,
-    "q279_vocab_choice_encode" -> q279Sql)
+  val registry: Seq[Query] = Seq(
+    Query("q266_unigram_vocab", q266UnigramVocab _, q266Sql),
+    Query("q267_unigram_segment", q267UnigramSegment _, q267Sql),
+    Query("q269_unigram_encode", q269UnigramEncode _, q269Sql),
+    Query("q270_unigram_decode", q270UnigramDecode _, q270Sql),
+    Query("q275_vocab_size_auto", q275VocabSizeAuto _, q275Sql),
+    Query("q277_vocab_choice_persist", q277VocabChoicePersist _, q277Sql),
+    Query("q279_vocab_choice_encode", q279VocabChoiceEncode _, q279Sql),
+  )
 }

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,11 +20,9 @@ import org.apache.spark.sql.functions._
   * Scale: the join shuffles on `word`, the pair aggregation on
   * (l_id, r_id) — both partial-aggregated. The known hazard is term skew
   * (stop-list-surviving words present in most documents make near-
-  * quadratic groups); [[pruneHighDf]] caps document frequency, the
-  * standard inverted-index mitigation (cf. prefix-filtering literature).
-  * A broadcast-cartesian strategy ([[crossJoinDot]]) remains for small
-  * sides (Task-2 matrices), and MinHash LSH (graft.dedup) is the
-  * approximate path at 100 TB.
+  * quadratic groups); on small dense vocabularies [[argmaxAdaptive]]
+  * takes the dense-broadcast argmax instead, and MinHash LSH
+  * (graft.dedup) is the approximate path at 100 TB.
   */
 object Similarity extends org.apache.spark.internal.Logging {
 
@@ -38,40 +36,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     l.join(r, Seq("word"))
       .groupBy(col("l_id"), col("r_id"))
       .agg(sum(col("l_w") * col("r_w")).as("sim"))
-  }
-
-  /** DF-based candidate pruning for skewed vocabularies: drop terms that
-    * appear in more than `maxDfFraction` of documents before the join
-    * (they contribute near-uniform similarity mass at quadratic cost).
-    * Exact results require maxDfFraction = 1.0; production similarity
-    * search at scale runs 0.05–0.2.
-    */
-  def pruneHighDf(vectors: DataFrame, nDocs: Long, maxDfFraction: Double): DataFrame = {
-    val df = vectors.groupBy(col("word"))
-      .agg(countDistinct(col("id")).as("word_df"))
-      .filter(col("word_df") <= lit(maxDfFraction * nDocs))
-      .select(col("word"))
-    vectors.join(broadcast(df), Seq("word"), "left_semi")
-  }
-
-  /** Broadcast-cartesian strategy (SURVEY.md §4.3 strategy 2): dot product
-    * of two map-typed vector columns. For small sides only (e.g. the
-    * category×category matrix); the map arithmetic runs as one codegen'd
-    * expression, no shuffle beyond the broadcast.
-    */
-  def mapDot(a: Column, b: Column): Column =
-    aggregate(map_entries(a), lit(0.0),
-      (acc, e) => acc + e.getField("value") * coalesce(element_at(b, e.getField("key")), lit(0.0)))
-
-  /** Cross-join similarity over assembled map vectors: (l_id, r_id, sim)
-    * for ALL pairs including zero-overlap ones (complete-matrix semantics,
-    * SURVEY.md J4).
-    */
-  def crossJoinDot(left: DataFrame, right: DataFrame): DataFrame = {
-    val l = left.select(col("id").as("l_id"), col("vec").as("l_vec"))
-    val r = right.select(col("id").as("r_id"), col("vec").as("r_vec"))
-    l.crossJoin(broadcast(r))
-      .select(col("l_id"), col("r_id"), mapDot(col("l_vec"), col("r_vec")).as("sim"))
   }
 
   /** Dense-broadcast argmax strategy — the right physical plan when the

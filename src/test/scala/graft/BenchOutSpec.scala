@@ -28,4 +28,47 @@ class BenchOutSpec extends AnyFunSuite {
       "SPARK_GRAFT_BENCH_COMMIT" -> "1",
       "SPARK_GRAFT_BENCH_OUT" -> "/tmp/x/b.json")).toString == "bench.json")
   }
+
+  test("a failed query is listed under failed and counted nowhere else") {
+    val (full, compact) = Bench.report(Seq(
+      Bench.Outcome("q1_a", Some(1.5), "0.5"),
+      Bench.Outcome("q2_b", None, ""),
+      Bench.Outcome("q3_c", Some(2.25), "0.7")),
+      "sf", "1,1,1", "2,2,2", "target/bench.json")
+    assert(full.contains(""""value":3.750,"""), full)
+    assert(full.contains(""""queries":{"q1_a":1.500,"q3_c":2.250}"""), full)
+    assert(full.contains(""""query_load":{"q1_a":"0.5","q3_c":"0.7"}"""), full)
+    assert(full.contains(""""failed":["q2_b"]"""), full)
+    assert(compact.contains(""""value":3.750,"""), compact)
+    assert(compact.contains(""""n_queries":2,"""), compact)
+    assert(compact.contains(""""failed":["q2_b"]"""), compact)
+    assert(compact.endsWith(""""queries_file":"target/bench.json"}"""), compact)
+  }
+
+  test("a clean run reports an empty failed list") {
+    val (full, compact) = Bench.report(Seq(Bench.Outcome("q1_a", Some(1.0), "0.1")),
+      "sf", "", "", "o")
+    assert(full.contains(""""failed":[]""") && compact.contains(""""failed":[]"""))
+    assert(compact.contains(""""n_queries":1,"""), compact)
+  }
+
+  test("registry lock: query names are unique across modules") {
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"registered more than once: ${dups.mkString(", ")}")
+  }
+
+  test("registry lock: every Excluded and Prep key is a registered name, and none is both") {
+    // a typo'd prep key would quietly time a cold build inside the
+    // timed region; a typo'd exclusion would bench an excluded query
+    val registered = SparkEntry.queries.keySet
+    val strayExcluded = Bench.Excluded.keySet -- registered
+    val strayPrep = Bench.Prep.keySet -- registered
+    assert(strayExcluded.isEmpty, s"Excluded names no registered query: $strayExcluded")
+    assert(strayPrep.isEmpty, s"Prep names no registered query: $strayPrep")
+    val both = Bench.Excluded.keySet intersect Bench.Prep.keySet
+    assert(both.isEmpty, s"excluded queries with a prep: $both")
+    assert(Bench.Headline.toSet == registered -- Bench.Excluded.keySet)
+    assert(Bench.Excluded.values.forall(_.trim.nonEmpty))
+  }
 }

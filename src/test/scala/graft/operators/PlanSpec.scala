@@ -90,6 +90,15 @@ class PlanSpec extends SparkTestBase {
   private def planned(name: String, audit: Either[Throwable, PlanAudit]): PlanAudit =
     audit.fold(e => fail(s"$name failed to plan: ${e.getMessage}"), identity)
 
+  /** An allowlist key that names no registered query allows nothing:
+    * a typo or a renamed query would leave its real offender unlisted.
+    * Checked before any plan is built. */
+  private def assertRegistered(allowlist: Map[String, String]): Unit = {
+    val stale = allowlist.keySet -- graft.SparkEntry.queries.keySet
+    assert(stale.isEmpty,
+      s"allowlist keys that name no registered query: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
   test("q1: filter pushed into parquet scan; unused columns pruned; partial agg") {
     val p = formatted(RelationalOps.q1PricingSummary(spark, sf0001))
     assert(p.contains("PushedFilters"))
@@ -1055,6 +1064,7 @@ class PlanSpec extends SparkTestBase {
       "q301_bucket_dial_auto" -> "the q281 class over the AUTO-bucketed artifact's vocabulary-sized df table; the counted auto-builds (tokenize + distinct-count + choice) run eagerly before the served plan exists",
       "q302_sql_masked_serve" -> "the q283 class reached through the graft_bm25_masked TVF (synthesis windows over the masked vocabulary-sized df table, resolved at analysis); the plan IS the DataFrame verb's plan by construction",
       "q304_maskeddf_alternation" -> "the q283 class over the alternation cycle's own lake replica: synthesis windows over A's tombstone-stamp-keyed masked-df state (vocabulary-sized); the cold build + four counted ensures run eagerly before the served plan exists")
+    assertRegistered(bounded)
     val offenders = gatedPlanAudits.flatMap { case (name, audit) =>
       if (planned(name, audit).unpartitionedWindow) Some(name) else None
     }
@@ -1188,6 +1198,7 @@ class PlanSpec extends SparkTestBase {
       "q301_bucket_dial_auto" -> "the q281 serve shapes verbatim over the auto-bucketed index (LIMIT-150 query synthesis from the artifact's df table + its <=|Q|*2 distinct-terms projection, both localCheckpointed); the auto-build (tokenize + distinct vocab count + ladder choice) is a write that runs before the served plan exists",
       "q302_sql_masked_serve" -> "the q283 serve shapes verbatim, reached through the graft_bm25_masked TVF (analysis returns the DataFrame verb's own analyzed plan — LIMIT-150 query synthesis from the validated masked-df read + its <=|Q|*2 distinct-terms projection, both localCheckpointed; tombstone side capacity-gated via BoundedBroadcast)",
       "q304_maskeddf_alternation" -> "the q283 serve shapes verbatim over the alternation cycle's own lake replica (LIMIT-150 query synthesis from A's tombstone-stamp-keyed masked-df state + its <=|Q|*2 distinct-terms projection, both localCheckpointed; tombstone side capacity-gated via BoundedBroadcast); the cold index build and the four counted ensures are writes that run before the served plan exists")
+    assertRegistered(justified)
     val offenders = gatedPlanAudits.flatMap { case (name, audit) =>
       if (planned(name, audit).unboundedBroadcast) Some(name) else None
     }

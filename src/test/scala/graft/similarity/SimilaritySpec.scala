@@ -39,21 +39,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(top2.count(_.getString(0) == "p") === 1)
   }
 
-  test("crossJoinDot includes zero-overlap pairs (complete matrix)") {
-    val l = graft.tfidf.TfIdf.assembleVectors(vecs)
-    val sims = Similarity.crossJoinDot(l, l)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(sims(("a", "c")) === 0.0)
-    assert(math.abs(sims(("a", "b")) - 0.6) < 1e-12)
-    assert(sims.size === 9)
-  }
-
-  test("pruneHighDf drops terms above the df fraction") {
-    // "x" appears in 2/3 docs; cap at 0.5 → only "y"/"z" terms survive
-    val pruned = Similarity.pruneHighDf(vecs, 3, 0.5)
-    assert(pruned.select($"word").distinct().as[String].collect().toSet === Set("y", "z"))
-  }
-
   test("denseArgmax ≡ invertedIndexJoin+argmax on numeric-id vectors") {
     // weights rounded to 6dp as the adaptive contract requires
     val nvecs = Seq(
