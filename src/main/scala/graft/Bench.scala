@@ -245,10 +245,9 @@ object Bench {
     // optimization claims on a loaded box: ambient load drifts on the
     // minute scale, so A-then-all-B comparisons confound variant with
     // load; BACK-TO-BACK alternation cancels the drift. Variant B is
-    // the same query under SQL-conf overrides (how every graft
-    // optimization knob is expressed);
+    // the same query under SQL-conf overrides;
     //   SPARK_GRAFT_BENCH_AB="qname;conf:key=v[,key=v];reps:N"
-    // e.g. "q282_postings_append_cycle;conf:spark.graft.write.sized=false;reps:4"
+    // e.g. "q282_postings_append_cycle;conf:spark.sql.shuffle.partitions=8;reps:4"
     // runs warm-up + N alternating A/B pairs and prints ONE JSON line
     // with both series and medians, then exits (no full suite).
     sys.env.get("SPARK_GRAFT_BENCH_AB").foreach { spec =>

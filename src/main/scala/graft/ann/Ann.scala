@@ -3,8 +3,8 @@ package graft.ann
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -18,9 +18,9 @@ import graft.io.StampSidecar
   * Scale design: the query set is broadcast (queries ≪ corpus — the
   * realistic ANN shape); the corpus is scanned once, partition-parallel,
   * and top-k is reduced either via window ranking (oracle-deterministic
-  * path) or via [[TopKAgg]], a partial-aggregating top-k heap that keeps
-  * only k rows per query per partition before the shuffle (the 1000-
-  * executor path: shuffle volume O(queries×k×partitions), not
+  * path) or via [[graft.plans.TopKPerKeyExec]], a bounded top-k heap that
+  * keeps only k rows per query per partition before the shuffle (the
+  * 1000-executor path: shuffle volume O(queries×k×partitions), not
   * O(queries×corpus)). Sign-LSH replaces the full scan with a bucket
   * equi-join; hyperplanes are Rademacher vectors derived from md5 so the
   * whole pipeline stays deterministic and DuckDB-checkable.
@@ -365,47 +365,6 @@ object Ann {
       .filter(round(VectorFunctions.dot(col("av"), col("bv")), 6) >= minCos)
       .groupBy(col("b")).agg(min(col("a")).as("dup_of"))
     assigned.join(dupOf, assigned("vec_id") === dupOf("b"), "left")
-      .select(col("vec_id"), col("cluster"),
-        when(col("dup_of").isNotNull, lit("semantic_dup"))
-          .otherwise(lit("kept")).as("verdict"),
-        col("dup_of"))
-  }
-
-  /** Probe NEW vectors against a persisted semantic-dedup index — the
-    * incremental-ingest form of [[semanticDedupVerdicts]] and the
-    * batch core of its streaming twin
-    * ([[graft.streaming.StreamingOps.streamingSemanticDedup]]): each
-    * new vector is assigned to its nearest centroid (the [[ivfProbe]]
-    * L2 rule — round-6 dist, cluster-asc tie-break — over the
-    * broadcast centroid table), then compared against the ACCEPTED
-    * corpus members of that cluster only (the SemDeDup blocking —
-    * candidate volume is cluster-local, never new × corpus); verdict
-    * `semantic_dup` with the minimum qualifying corpus id, else
-    * `kept`. Output shape matches [[semanticDedupVerdicts]]:
-    * (vec_id, cluster, verdict, dup_of).
-    */
-  def semanticDedupProbe(newVecs: DataFrame, assigned: DataFrame,
-      centroids: DataFrame, minCos: Double): DataFrame = {
-    VectorFunctions.register(newVecs.sparkSession)
-    val cent = centroids.select(col("cluster"), col("centroid"),
-      VectorFunctions.dotD(col("centroid"), col("centroid")).as("cnorm"))
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist").asc, col("cluster").asc)
-    val assignedNew = newVecs
-      .select(col("vec_id"), col("embedding"),
-        col("embedding").cast("array<double>").as("qv"))
-      .crossJoin(broadcast(cent))
-      .withColumn("dist", round(
-        col("cnorm") - lit(2.0) * VectorFunctions.dotD(col("qv"), col("centroid")), 6))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-    val dupOf = assignedNew
-      .join(assigned.select(col("vec_id").as("c_id"), col("cluster"),
-        col("embedding").as("cv")), Seq("cluster"))
-      .filter(round(VectorFunctions.dot(col("embedding"), col("cv")), 6) >= minCos)
-      .groupBy(col("vec_id")).agg(min(col("c_id")).as("dup_of"))
-    assignedNew.join(dupOf, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
         when(col("dup_of").isNotNull, lit("semantic_dup"))
           .otherwise(lit("kept")).as("verdict"),
@@ -862,10 +821,8 @@ object Ann {
     (scored, assigned.select(col("vec_id")))
   }
 
-  /** kNN label-vote tail — SHARED by the batch label-noise audit
-    * (q260) and the streaming ingest screening
-    * ([[labelNoiseProbe]] / StreamingOps.streamingLabelNoise), the
-    * bm25Rank one-formula discipline: majority label of each query's
+  /** kNN label-vote tail of the label-noise audit (q260): majority
+    * label of each query's
     * neighbor set with the deterministic (count desc, label asc)
     * tie-break, plus n_agree (neighbors carrying the query's own
     * label). `top` is a (qid, nid) neighbor table; `qLbl`/`nLbl` map
@@ -888,23 +845,6 @@ object Ann {
       .select(col("qid").as("vec_id"), col("own").as("label"),
         col("b.l").as("knn_label"), col("n_agree"))
   }
-
-  /** Screen NEW labeled vectors against a persisted accepted corpus —
-    * q260's incremental-ingest form and the batch core of its
-    * streaming twin: the BATCH side broadcasts (it is the small side
-    * by construction — [[bruteForceTopKViaOperator]] broadcasts the
-    * query side), neighbors come from the corpus, and the verdict
-    * rides the shared [[knnLabelVotes]] tail. Returns only the
-    * DISAGREEMENTS (the rows a reviewer sees). Stateless per batch,
-    * so stream ≡ batch by shared code.
-    */
-  def labelNoiseProbe(newVecs: DataFrame, corpus: DataFrame,
-      k: Int): DataFrame =
-    knnLabelVotes(
-        bruteForceTopKViaOperator(newVecs, corpus, k),
-        newVecs.select(col("vec_id"), col("label")),
-        corpus.select(col("vec_id"), col("label")))
-      .filter(col("knn_label") =!= col("label"))
 
   /** One-scan nprobe SWEEP — [[ivfPqProbe]]'s scoring evaluated ONCE
     * at max(nprobes) with the per-cluster probe rank KEPT, then each
@@ -1332,8 +1272,7 @@ object Ann {
     * inverted lists — only the touched clusters' directories gain
     * files; centroids/codebooks are untouched by construction.
     * Probes ([[ivfPqProbe]]) see appended vectors on their next read
-    * with zero probe-side changes. Streaming twin:
-    * [[graft.streaming.StreamingOps.streamingIvfPqAppend]].
+    * with zero probe-side changes.
     */
   def ivfPqAppend(newVecs: DataFrame, indexDir: String): Unit = {
     val spark = newVecs.sparkSession
@@ -1557,29 +1496,5 @@ object Ann {
       .repartition(1).write.mode("overwrite").parquet(s"$outDir/centroids")
     Seq.empty[(Int, Int, Array[Double])].toDF("sub", "code", "centroid")
       .repartition(1).write.mode("overwrite").parquet(s"$outDir/codebooks")
-  }
-
-  // -------------------------------------------------------- TopKAgg
-  case class Neighbor(nid: Long, cos: Double)
-
-  /** Partial-aggregating top-k: each partition keeps at most k
-    * neighbors per query before the shuffle, so reduce-side input is
-    * O(partitions×k) per query instead of O(corpus). Use via
-    * `functions.udaf(new TopKAgg(k))` grouped by query id.
-    */
-  class TopKAgg(k: Int) extends Aggregator[Neighbor, Seq[Neighbor], Seq[Neighbor]] {
-    private def shrink(s: Seq[Neighbor]): Seq[Neighbor] =
-      s.sortBy(n => (-n.cos, n.nid)).take(k)
-    def zero: Seq[Neighbor] = Nil
-    def reduce(buf: Seq[Neighbor], n: Neighbor): Seq[Neighbor] =
-      if (buf.size < k) shrink(buf :+ n)
-      else if (n.cos > buf.last.cos || (n.cos == buf.last.cos && n.nid < buf.last.nid))
-        shrink(buf :+ n)
-      else buf
-    def merge(a: Seq[Neighbor], b: Seq[Neighbor]): Seq[Neighbor] = shrink(a ++ b)
-    def finish(buf: Seq[Neighbor]): Seq[Neighbor] = buf
-    def bufferEncoder: Encoder[Seq[Neighbor]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Neighbor]]()
-    def outputEncoder: Encoder[Seq[Neighbor]] = bufferEncoder
   }
 }

@@ -15,10 +15,7 @@ import graft.text.TextPrep
   * strings''' — md5 is bit-identical across Spark and DuckDB, and taking
   * the lexicographic MIN of `md5(seed || shingle)` is a valid minwise
   * permutation family, which makes even MinHash signatures DuckDB-
-  * verifiable. The engine also exposes an `xxhash64` fast path
-  * ([[simhash64]], [[minhashSig64]]) for production scale, where md5
-  * string churn is the wrong trade — same algorithms, cheaper hash,
-  * not oracle-gated (xxhash64 differs across engines).
+  * verifiable.
   *
   * Scale shape: every operator here is explode → hash → partial-agg →
   * shuffle-on-key; no driver materialization, no cartesian anywhere.
@@ -149,15 +146,6 @@ object Dedup {
     elements.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Engine-only fast path: 64-bit xxhash64 minhash signature (array
-    * column `sig`). Same single-shuffle shape; ~10× cheaper per element
-    * than md5-string hashing at scale.
-    */
-  def minhashSig64(elements: DataFrame, k: Int, elemCol: String = "word"): DataFrame = {
-    val aggs = (0 until k).map(j => min(xxhash64(lit(j), col(elemCol))).as(f"mh$j%02d"))
-    elements.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** LSH banding: split the k-column signature into `bands` bands of
     * `rowsPerBand`, hash each band, and emit candidate pairs (a < b)
     * sharing at least one band bucket.
@@ -178,9 +166,9 @@ object Dedup {
   def lshBands(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     val bandCols = (0 until bands).map { b =>
       val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(j => col(f"mh$j%02d"))
-      // delimited concat: md5 signatures are fixed-width, but the
-      // xxhash64 fast-path signatures are variable-width decimal longs
-      // — without a delimiter (1,23) and (12,3) would collide.
+      // delimited concat: without a delimiter, variable-width
+      // signature values would collide ((1,23) vs (12,3)); the
+      // oracles hash the same '|'-joined string.
       md5(concat_ws("|", cols: _*).cast("binary"))
     }
     // ONE posexplode pass, NOT a bands-way union of projections: each
@@ -454,8 +442,6 @@ object Dedup {
       labels = next.select(col("id"), col("component"))
       done = changed == 0
       iter += 1
-      if (spark.conf.getOption("spark.graft.cc.log").contains("true"))
-        System.err.println(f"[cc] round $iter%2d changed=$changed%8d")
     }
     sym.unpersist()
     if (sym ne symBase) symBase.unpersist()
@@ -467,8 +453,7 @@ object Dedup {
   /** 16-bit SimHash from term frequencies (id, word, tf): bit i is the
     * sign of the tf-weighted sum of bit i across token hashes, where
     * "bit i" is the top bit of hex nibble i of md5(word). Truncated to
-    * 16 bits so the oracle can express it; [[simhash64]] is the full-
-    * width engine path.
+    * 16 bits so the oracle can express it.
     */
   def simhash16(tf: DataFrame): DataFrame = {
     val bitAggs = (0 until 16).map { i =>
@@ -480,22 +465,4 @@ object Dedup {
       when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
     sums.select(col("id").as("doc_id"), value.as("simhash16"))
   }
-
-  /** Full 64-bit SimHash via xxhash64 bits (engine-only fast path). */
-  def simhash64(tf: DataFrame): DataFrame = {
-    val h = xxhash64(col("word"))
-    val bitAggs = (0 until 64).map { i =>
-      sum(when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, col("tf"))
-        .otherwise(-col("tf"))).as(s"b$i")
-    }
-    val sums = tf.groupBy(col("id")).agg(bitAggs.head, bitAggs.tail: _*)
-    val value = (0 until 64).map(i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))).reduce(_ + _)
-    sums.select(col("id").as("doc_id"), value.as("simhash64"))
-  }
-
-  /** Hamming distance between two simhash columns (near-dup test:
-    * distance ≤ 3 at 64 bits).
-    */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

@@ -31,35 +31,4 @@ object Sinks {
   /** S5: single CSV with header. */
   def writeSingleCsv(df: DataFrame, path: String): Unit =
     df.repartition(1).write.mode("overwrite").option("header", "true").csv(path)
-
-  /** Scale-side output: hive-partitioned parquet layout
-    * (`path/col=value/...`) with bounded file sizes — the shape a
-    * downstream training job scans with partition pruning. The
-    * pre-write repartition co-locates each partition value's rows, so a
-    * directory gets `filesPerPartition` large files instead of one
-    * small file per upstream task (the classic small-files failure at
-    * 1000 executors); `maxRecordsPerFile` bounds the other direction.
-    *
-    * `filesPerPartition` is also the WRITE PARALLELISM per partition
-    * value: with 1, a hot value (lang=en at 80% of a corpus) funnels
-    * through a single task. The salt is a deterministic row hash, so
-    * retries write identical splits.
-    */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-      maxRecordsPerFile: Long = 1000000L, filesPerPartition: Int = 1,
-      dynamicOverwrite: Boolean = false): Unit = {
-    import org.apache.spark.sql.functions._
-    require(filesPerPartition > 0, "filesPerPartition must be positive")
-    val salt = pmod(xxhash64(struct(df.columns.map(col): _*)),
-      lit(filesPerPartition.toLong))
-    // dynamicOverwrite: replace ONLY the partitions present in df (the
-    // idempotent-replay mode the streaming bridge needs); default
-    // static overwrite replaces the whole path
-    df.repartition(partitionCols.map(col) :+ salt: _*)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", if (dynamicOverwrite) "dynamic" else "static")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
 }

@@ -27,10 +27,8 @@ object SizedWrite {
   val TargetBytes: Long = 128L * 1024 * 1024
 
   /** `df` coalesced down to ceil(estimatedBytes / 128 MB) partitions
-    * (≥ 1); escape hatch `spark.graft.write.sized=false` for A/B. */
+    * (≥ 1). */
   def sized(df: DataFrame): DataFrame = {
-    if (!df.sparkSession.conf.getOption("spark.graft.write.sized")
-        .forall(_.toBoolean)) return df
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val target =
       if (est > BigInt(Long.MaxValue)) Int.MaxValue

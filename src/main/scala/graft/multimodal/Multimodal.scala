@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column plumbing for a training-data
   * pipeline: media ride along as opaque `binary` columns with typed
-  * metadata, and per-asset compute (decode, feature extraction, frame
-  * sampling) runs batched per partition.
+  * metadata, and per-asset compute (decode, feature extraction) runs
+  * batched per partition.
   *
   * The actual codec step is STUBBED — media libraries are not in this
   * container — behind [[MediaDecoder]]; [[FakeDecoder]] is a
@@ -209,69 +209,6 @@ object Multimodal {
         MediaFeatures(a.asset_id, a.kind, a.payload.length.toLong, w, h, dur, ch, hash)
       }
     }
-  }
-
-  /** One sampled frame: parent asset, frame index, timestamp offset,
-    * and the (stub-decoded) frame payload.
-    */
-  case class Frame(asset_id: Long, frame_idx: Int, offset_ms: Long,
-      width: Int, height: Int, frame_bytes: Array[Byte])
-
-  /** Frame sampling — the one-to-many batch boundary (each video row
-    * explodes into ~duration·fps frame rows) that distinguishes frame
-    * extraction from per-asset featurize. Same partition-batched
-    * discipline: one decoder per partition, frames emitted lazily via
-    * iterator flatMap (no per-asset frame buffering), parent blob
-    * dropped in the same pass. The frame "decode" is the stub: a real
-    * implementation swaps [[MediaDecoder]] for a codec; frame_bytes
-    * here is a deterministic slice of the payload so downstream
-    * plumbing (sizes, hashing, grouping) is testable.
-    *
-    * Non-video kinds yield no frames (documented filter-at-source).
-    */
-  def frameSample(assets: Dataset[MediaAsset], fps: Double,
-      decoder: MediaDecoder = FakeDecoder): Dataset[Frame] = {
-    import assets.sparkSession.implicits._
-    require(fps > 0, "fps must be positive")
-    assets.mapPartitions { it =>
-      val d = decoder
-      it.filter(_.kind == "video").flatMap { a =>
-        val (w, h, durMs, _) = d.decode(a.kind, a.payload)
-        val stepMs = math.max(1L, math.round(1000.0 / fps))
-        val n = math.max(1L, durMs / stepMs).toInt
-        val body = a.payload.drop(16)
-        (0 until n).iterator.map { i =>
-          // deterministic stand-in frame: a rotating 32-byte slice
-          val start = if (body.isEmpty) 0 else (i * 31) % math.max(1, body.length)
-          val frame = body.slice(start, math.min(start + 32, body.length))
-          Frame(a.asset_id, i, i * stepMs, w, h, frame)
-        }
-      }
-    }
-  }
-
-  /** Resize declaration for image assets: recomputes target dimensions
-    * (aspect-preserving fit into a bounding box) as pure expressions
-    * over the decoded header — the Spark-side half of a resize (the
-    * pixel transform itself is codec work behind [[MediaDecoder]]).
-    * Emits (asset_id, width, height, target_w, target_h, scale).
-    */
-  def resizePlan(assets: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val meta = metadataExpr(assets)
-      .select(col("asset_id"), col("kind"), col("width"), col("height"))
-      .filter(col("kind") === "image")
-    val scale = least(
-      lit(maxW.toDouble) / col("width"),
-      lit(maxH.toDouble) / col("height"),
-      lit(1.0)) // never upscale
-    // targets from the UNROUNDED scale (rounding first drops a pixel —
-    // e.g. width 1919 → floor(1919·0.333507)=639 instead of the exact
-    // 640 fit); only the reported scale column is rounded for display
-    meta
-      .withColumn("target_w", greatest(floor(col("width") * scale), lit(1)).cast("int"))
-      .withColumn("target_h", greatest(floor(col("height") * scale), lit(1)).cast("int"))
-      .withColumn("scale", round(scale, 6))
-      .drop("kind")
   }
 
   /** Expression-only metadata path (no decoder): byte length + payload

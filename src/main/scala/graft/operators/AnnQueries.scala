@@ -1159,8 +1159,8 @@ object AnnQueries {
     * hashes the whole append path: assignment, residual encode,
     * layout, and probe visibility of late vectors. AnnSpec pins the
     * equivalence law (append ≡ rebuild-with-same-codebooks) and that
-    * appended vectors are findable. Streaming twin:
-    * [[graft.streaming.StreamingOps.streamingIvfPqAppend]].
+    * appended vectors are findable. The snapshot-cursor form is
+    * [[ivfPqAppendFromSnapshots]] (q297).
     */
   val IvfPqAppendMod = 5
 
@@ -2158,9 +2158,38 @@ object AnnQueries {
        |ORDER BY vec_id""".stripMargin
 
   // --------------------------------------------------------------- q297
+  /** [[Round18Queries.postingsAppendFromSnapshots]]'s ANN twin — the
+    * snapshot cursor feeding the SECOND index family: each interval's
+    * delta (the ingested vector files, named exactly by the manifest
+    * difference) is encoded against the index's EXISTING quantizers
+    * and appended into the cluster-partitioned inverted lists
+    * ([[graft.ann.Ann.ivfPqAppend]] — centroids/codebooks untouched by
+    * construction, so per-vector assignments are independent and any
+    * interval split lands on the same index state the union append
+    * would). Same contracts as the postings twin: the index must
+    * exist (built for the from-snapshot's state), a rewrite inside
+    * the range fails loudly at the delta read (a compacted vector
+    * lake needs a rebuild/retrain decision, not an append). Returns
+    * the number of non-empty intervals applied. */
+  def ivfPqAppendFromSnapshots(s: SparkSession, snapDir: String,
+      indexDir: String, fromId: Int, toId: Int): Int = {
+    val metaP = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
+    val fs = metaP.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(metaP))
+      sys.error("ivfPqAppendFromSnapshots: no persisted IVF-PQ index " +
+        s"at $indexDir — build offline for snapshot $fromId first")
+    (fromId until toId).count { k =>
+      val delta = graft.io.SnapshotStore.readDelta(s, snapDir, k, k + 1)
+        .select(col("vec_id"), col("embedding"))
+      val nonEmpty = !delta.isEmpty
+      if (nonEmpty) Ann.ivfPqAppend(delta, indexDir)
+      nonEmpty
+    }
+  }
+
   /** SNAPSHOT-CURSOR IVF-PQ CATCH-UP — the round-13 cursor-fed-index
     * pattern on the SECOND index family
-    * ([[graft.streaming.StreamingOps.ivfPqAppendFromSnapshots]]): the
+    * ([[ivfPqAppendFromSnapshots]]): the
     * vector lake is snapshotted as it grows, and the serving index is
     * brought current by replaying manifest intervals through
     * [[graft.ann.Ann.ivfPqAppend]] — each delta encoded against the
@@ -2214,8 +2243,7 @@ object AnnQueries {
     e.filter(col("vec_id") % 4 === 3)
       .write.mode("append").parquet(lakeVecs)
     graft.io.SnapshotStore.record(s, lakeVecs, snaps)
-    val applied = graft.streaming.StreamingOps
-      .ivfPqAppendFromSnapshots(s, snaps, idx, 1, 3)
+    val applied = ivfPqAppendFromSnapshots(s, snaps, idx, 1, 3)
     val nIndexed = s.read.parquet(s"$idx/assignments").count()
     Ann.ivfPqProbe(querySubset(s, dir), idx, PqTopK, IvfPqNprobe)
       .select(col("qid"), col("nid"), col("adc_micro"), col("rk"))

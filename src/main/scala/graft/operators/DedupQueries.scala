@@ -979,7 +979,7 @@ object DedupQueries {
             Bands, RowsPerBand)
           .write.mode("overwrite").parquet(s"$base/bands")
         // reduced to UNIQUE h → smallest owning doc: consumers (q78's
-        // exact stage, the streaming verdict join) then pay a pure
+        // exact stage) then pay a pure
         // equi-join per lookup with no per-batch re-aggregation
         corpus.select(md5(col("text")).as("h"), col("doc_id").as("c_id"))
           .groupBy(col("h")).agg(min(col("c_id")).as("c_id"))

@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
 import graft.Query
 import graft.Tables
 
-/** Batch analytics over the `events` stream table — the batch halves of
-  * the streaming operators (graft.streaming exposes the same shapes over
-  * readStream): tumbling-window aggregation, gap-based sessionization,
-  * keyed dedup. Timestamps are exported as epoch milliseconds (bigint)
-  * so oracle comparison never touches timezone/precision formatting.
+/** Batch analytics over the `events` table: tumbling-window
+  * aggregation, gap-based sessionization, keyed dedup. Timestamps are
+  * exported as epoch milliseconds (bigint) so oracle comparison never
+  * touches timezone/precision formatting.
   */
 object EventQueries {
 
@@ -75,14 +74,13 @@ object EventQueries {
 
   // --------------------------------------------------------------- q111
   /** Sessionization via the NATIVE `session_window` operator — the
-    * third member of the repo's sessionization triple (q31 gaps-and-
-    * islands windows, `StreamingOps.sessionize` stateful streaming,
-    * and now the built-in batch operator a Structured Streaming job
-    * shares). Plan shape: ONE exchange on user_id feeding a session-
-    * merging aggregate — no per-user window sort pass, which is the
-    * scale argument for preferring it over q31's island windows when
-    * only the per-session AGGREGATES are needed (islands still win
-    * when every row must keep its session id).
+    * second of the repo's sessionization spellings (after q31's gaps-
+    * and-islands windows), and the built-in operator a Structured
+    * Streaming job would share. Plan shape: ONE exchange on user_id
+    * feeding a session-merging aggregate — no per-user window sort
+    * pass, which is the scale argument for preferring it over q31's
+    * island windows when only the per-session AGGREGATES are needed
+    * (islands still win when every row must keep its session id).
     *
     * Boundary semantics: an event arriving EXACTLY `gap` after its
     * predecessor MERGES into the session — Spark's session iterators

@@ -36,15 +36,6 @@ object RelationalOps {
   def exactMoneySum(c: Column): Column =
     sum(round(c * lit(10000), 0).cast("long")) / lit(10000.0)
 
-  /** Round every double column to 6 dp — engine/oracle hash stability. */
-  def round6(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
-    df.schema.fields.foldLeft(df) { (acc, f) =>
-      if (f.dataType == DoubleType) acc.withColumn(f.name, round(col(f.name), 6))
-      else acc
-    }
-  }
-
   /** q1: pricing summary — scan-heavy grouped aggregation (TPC-H Q1 shape).
     * Filter pushes into the parquet scan; aggregation is partial→final on a
     * 6-value composite key, so the shuffle moves O(groups), not O(rows).
@@ -191,9 +182,7 @@ object RelationalOps {
       |ORDER BY c_mktsegment, rk""".stripMargin
 
   /** q4: order-status mix per region — pivot via conditional aggregation
-    * (SURVEY.md A11; fixed column set keeps the oracle expressible). The
-    * module also exposes [[pivotDynamic]] using Spark's native
-    * groupBy.pivot for dynamic key sets (used by the Task-2 matrix).
+    * (SURVEY.md A11; fixed column set keeps the oracle expressible).
     */
   def q4StatusPivotByRegion(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -224,15 +213,6 @@ object RelationalOps {
       |JOIN region   ON n_regionkey = r_regionkey
       |GROUP BY r_name
       |ORDER BY r_name""".stripMargin
-
-  /** Native dynamic pivot (values discovered from data) — Spark's
-    * groupBy().pivot() replaces the reference's pandas pivot
-    * (lab2.py:301–303). Not oracle-gated (dynamic schema); exercised by
-    * the Task-2 category matrix and ScalaTest.
-    */
-  def pivotDynamic(df: DataFrame, rowKey: String, colKey: String, value: String): DataFrame =
-    df.groupBy(col(rowKey)).pivot(colKey).agg(first(col(value)))
-      .orderBy(col(rowKey))
 
   /** q5: semi/anti-join coverage (SURVEY.md §2.7 D4 extension) — per
     * nation: customers with vs without 1995 orders. Both joins build on

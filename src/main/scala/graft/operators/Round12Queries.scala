@@ -182,61 +182,6 @@ object Round12Queries {
           (col("sza") + col("szb") - col("inter")), 0).cast("long").as("jac_micro"))
   }
 
-  /** Probe NEW sets against an OLD corpus — the incremental-ingest
-    * form of [[setSimJoin]] and the batch core of its streaming twin
-    * ([[graft.streaming.StreamingOps.streamingSetSimProbe]]): every
-    * (new_id, old_id) pair with Jaccard ≥ tauNum/tauDen, exact
-    * counts, NO new×new or old×old pairs.
-    *
-    * Correctness of the cross prefix filter: both sides rank their
-    * shingles under ONE global total order — the OLD corpus's rarity
-    * (df asc, shingle asc), extended with df = 0 for shingles the
-    * index has never seen (unseen-first; any consistent total order
-    * satisfies the Bayardo prefix-filter theorem, and unseen shingles
-    * cannot produce candidates anyway since the equi-join has nothing
-    * to match them against). The OLD side's ranked/prefix stream is
-    * exactly [[rankedByRarity]]'s output — at lake scale a persisted
-    * artifact maintained by the indexing job; the NEW side ranks only
-    * the probe batch. Exact verify on candidates only, as always.
-    */
-  def setSimProbe(newSh: DataFrame, oldSh: DataFrame,
-      tauNum: Int = SetSimTauNum, tauDen: Int = SetSimTauDen): DataFrame = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"setSimProbe: tau must be in (0, 1], got $tauNum/$tauDen")
-    val dfreq = oldSh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    def rankUnderIndexOrder(sh: DataFrame): DataFrame = {
-      val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      val wOrd = Window.partitionBy(col("id"))
-        .orderBy(col("df").asc, col("shingle").asc)
-      sh.join(dfreq, Seq("shingle"), "left_outer")
-        .withColumn("df", coalesce(col("df"), lit(0L)))
-        .withColumn("rn", row_number().over(wOrd))
-        .join(sizes, Seq("id"))
-        .select(col("id"), col("shingle"), col("sz"), col("rn"))
-    }
-    val oldPfx = rarestFirstPrefix(rankUnderIndexOrder(oldSh), tauNum, tauDen)
-    val newPfx = rarestFirstPrefix(rankUnderIndexOrder(newSh), tauNum, tauDen)
-    val cands = newPfx.select(col("id").as("a"), col("shingle"),
-        col("sz").as("sza"))
-      .join(oldPfx.select(col("id").as("b"), col("shingle"),
-        col("sz").as("szb")), Seq("shingle"))
-      .filter(col("sza") * tauNum <= col("szb") * tauDen &&
-        col("szb") * tauNum <= col("sza") * tauDen)
-      .select(col("a"), col("b"), col("sza"), col("szb")).distinct()
-    val inter = cands.select(col("a"), col("b"))
-      .join(newSh.select(col("id").as("a"), col("shingle")), Seq("a"))
-      .join(oldSh.select(col("id").as("b"), col("shingle")),
-        Seq("b", "shingle"), "left_semi")
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-    cands.join(inter, Seq("a", "b"))
-      .filter(col("inter") * (tauDen + tauNum) >=
-        (col("sza") + col("szb")) * tauNum)
-      .select(col("a").as("new_id"), col("b").as("old_id"), col("inter"),
-        (col("sza") + col("szb") - col("inter")).as("uni"),
-        round(lit(1e6) * col("inter") /
-          (col("sza") + col("szb") - col("inter")), 0).cast("long").as("jac_micro"))
-  }
-
   def q211SetSimJoin(s: SparkSession, dir: String): DataFrame = {
     // the distinct shingle table appears 4x in the DAG (sizes, df,
     // prefixes, verify) — materialize it once; alternating A/B under

@@ -53,9 +53,7 @@ object Round14Queries {
   val Bm25TopK = 10
 
   /** Keyed BM25 scoring core — ONE implementation of the Okapi formula
-    * shared by the single-query tail ([[bm25Rank]], and through it the
-    * streaming incremental index
-    * [[graft.streaming.StreamingOps.runningBm25]]) and the multi-query
+    * shared by the single-query tail ([[bm25Rank]]) and the multi-query
     * retrieval join ([[Round15Queries.q244MultiBm25]]), so every
     * surface agrees by construction. Input `tfq(query_id, doc_id,
     * term, tf)` — the per-query term restriction/fan-out already
@@ -95,13 +93,9 @@ object Round14Queries {
       .agg(round(sum(col("contrib")), 6).as("bm25"),
         count(lit(1)).as("n_terms_hit"))
 
-  /** Single-query BM25 ranking tail — the batch query AND the
-    * streaming incremental index
-    * ([[graft.streaming.StreamingOps.runningBm25]]) share this, so
-    * stream ≡ batch holds by construction, not by parallel
-    * maintenance; scoring itself rides [[bm25ScoreKeyed]] with a
-    * constant query_id, so the multi-query join shares the formula
-    * too. Inputs: `tf(doc_id, term, tf)` restricted to query terms,
+  /** Single-query BM25 ranking tail; scoring rides [[bm25ScoreKeyed]]
+    * with a constant query_id, so the multi-query join shares the
+    * formula too. Inputs: `tf(doc_id, term, tf)` restricted to query terms,
     * `dl(doc_id, dl)` covering at least the matched docs,
     * `dfTab(term, df)`, `stats(n_docs, avgdl)` (1 row). Ranking is
     * TakeOrderedAndProject (top-k heap), never a global sort. */
@@ -374,10 +368,7 @@ object Round14Queries {
     * window rides a bounded post-aggregation table, the same class as
     * q170's value histogram. Nothing corpus-sized crosses the window.
     */
-  /** Rank-sum AUC tail over a (score, pos, neg) group table — shared
-    * by the batch gate AND the streaming monitor
-    * ([[graft.streaming.StreamingOps.runningRocAuc]]), so stream ≡
-    * batch holds by shared code (the bm25Rank discipline). */
+  /** Rank-sum AUC tail over a (score, pos, neg) group table (q229). */
   def rocAucFromGroups(groups: DataFrame): DataFrame = {
     val w = Window.orderBy(col("score"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -12,7 +12,7 @@ import graft.text.TextPrep
   * single-query demos to the keyed, fleet-sized operators a
   * contamination/eval pipeline actually runs — a query TABLE joined
   * against the corpus with per-query top-k, served by the same scoring
-  * core the single-query and streaming surfaces already share.
+  * core the single-query surface already uses.
   */
 object Round15Queries {
 
@@ -23,8 +23,7 @@ object Round15Queries {
     * 10k eval prompts, find its most-relevant training docs"
     * (decontamination, eval-set leakage audits, retrieval evaluation).
     * Scoring is [[Round14Queries.bm25ScoreKeyed]] — the SAME Okapi core
-    * as the single-query q226 and the streaming incremental index, so
-    * all three surfaces agree by construction.
+    * as the single-query q226, so both surfaces agree by construction.
     *
     * Shape at scale: the corpus-wide stages are ONE inverted-index
     * build (per-(doc, term) tf — at lake scale the persisted q216
@@ -131,20 +130,18 @@ object Round15Queries {
         first(col("avgdl")).as("avgdl"))
 
   /** Serve an ARBITRARY batch of queries (query_id, term rows) at a
-    * FIXED dial against `dir`'s corpus — the stateless micro-batch
-    * core behind the streaming persisted-dial serve. Same algebra as
-    * q273's serve (components grouped once, one row-local Okapi fold
-    * at the single point, the shared rank dispatch), restricted to
-    * the batch's queries: per-query rows are independent, so any
-    * whole-query partition of a workload unions to the one-batch
-    * result (the stream ≡ batch law, StreamingOpsSpec). Contract: a
-    * query's terms must arrive in ONE batch — splitting a query
-    * across batches would rank its fragments separately.
+    * FIXED dial against `dir`'s corpus — the recompute reference for
+    * the persisted-dial serve. Same algebra as q273's serve
+    * (components grouped once, one row-local Okapi fold at the single
+    * point, the shared rank dispatch), restricted to the batch's
+    * queries: per-query rows are independent, so any whole-query
+    * partition of a workload unions to the one-batch result.
+    * Contract: a query's terms must arrive in ONE batch — splitting a
+    * query across batches would rank its fragments separately.
     *
     * 100 TB shape: per batch this rebuilds corpus stats from the
     * documents table — the recompute REFERENCE the artifact path is
-    * held equal to. Production serving (and the streaming twin,
-    * [[graft.streaming.StreamingOps.streamingBm25Rank]]) goes through
+    * held equal to. Production serving goes through
     * [[bm25ServeQueriesFromIndex]] over the persisted q281 postings
     * artifact instead — same query-side broadcasts and rank dispatch,
     * corpus text never read (the measured 3.1× marginal-serve win). */
@@ -1222,7 +1219,7 @@ object Round15Queries {
       docRows, docContent)
 
   /** Append ONE micro-batch of documents (doc_id, text) into the index
-    * — the streaming-ingest entry: meta advances EXACTLY by the
+    * — the batch-ingest entry: meta advances EXACTLY by the
     * batch's stamp contribution (plain long sums — the same arithmetic
     * the corpus stamp folds, so N streamed batches land on the
     * identical meta a one-shot build over the union would). Contract

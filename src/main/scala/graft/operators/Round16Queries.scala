@@ -60,8 +60,7 @@ object Round16Queries {
   val DsirTargetLang = "en"
 
   /** The per-(doc, bucket) hashed-feature profile — q255's compressed
-    * document representation (≤ B rows per doc, vs the token stream)
-    * and the state the streaming twin accumulates. */
+    * document representation (≤ B rows per doc, vs the token stream). */
   private[graft] def dsirProfile(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"),
         posexplode(TextPrep.tokensCol(col("text"))).as(Seq("pos", "tok")))
@@ -71,12 +70,9 @@ object Round16Queries {
       .groupBy(col("doc_id"), col("lang"), col("bucket"))
       .agg(count(lit(1)).as("n"))
 
-  /** The scoring tail over an (doc_id, lang, bucket, n) profile —
-    * SHARED by batch q255 and the streaming
-    * [[graft.streaming.StreamingOps.runningDsir]] twin (stream ≡
-    * batch by shared code, the bm25Rank discipline). All weights are
-    * exact long sums of the nano-quantized per-bucket log-ratios,
-    * weighted by the profile's occurrence counts. */
+  /** q255's scoring tail over an (doc_id, lang, bucket, n) profile.
+    * All weights are exact long sums of the nano-quantized per-bucket
+    * log-ratios, weighted by the profile's occurrence counts. */
   private[graft] def dsirWeightsFromProfile(profile: DataFrame): DataFrame = {
     val s = profile.sparkSession
     val raw = profile.groupBy(col("bucket")).agg(sum(col("n")).as("raw_ct"))
@@ -163,8 +159,7 @@ object Round16Queries {
   val PassageTokens = 10
 
   /** (doc_id, chunk, phash) passage table from (doc_id, text) rows —
-    * shared by q257, its streaming ingest probe
-    * ([[passageDedupProbe]]), and the artifact build. */
+    * q257's passage assembly. */
   private[graft] def passagesOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         posexplode(TextPrep.tokensCol(col("text"))).as(Seq("pos", "tok")))
@@ -174,25 +169,6 @@ object Round16Queries {
       .agg(md5(concat_ws(" ",
         transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
           x => x.getField("tok"))).cast("binary")).as("phash"))
-
-  /** Probe NEW documents' passages against a PERSISTED corpus
-    * passage-hash table (phash → occ — the scheduled-indexing
-    * artifact; the q78/imageDedup pattern): per new doc, how many of
-    * its passages already exist in the accepted corpus. The join is
-    * phash-keyed (both sides hash-partitioned — the artifact is the
-    * natural bucketed table at lake scale); per-batch cost ∝ the
-    * batch's passages, never batch × corpus. Stateless across
-    * batches, so the streaming twin is exact by shared code. */
-  private[graft] def passageDedupProbe(newDocs: DataFrame,
-      corpusOcc: DataFrame): DataFrame =
-    passagesOf(newDocs)
-      .join(corpusOcc.select(col("phash"), col("occ")), Seq("phash"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_passages"),
-        sum(when(col("occ").isNotNull, 1L).otherwise(0L)).as("n_known"))
-      .select(col("doc_id"), col("n_passages"), col("n_known"),
-        round(col("n_known") / col("n_passages").cast("double"), 6)
-          .as("known_fraction"))
 
   def q257PassageDedup(s: SparkSession, dir: String): DataFrame = {
     val passages = passagesOf(

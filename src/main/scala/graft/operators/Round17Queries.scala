@@ -980,10 +980,9 @@ object Round17Queries {
     */
   val SplitFolds = 10L
 
-  /** The row-local assignment core — shared by q288, the streaming
-    * twin ([[graft.streaming.StreamingOps.streamingSplitAssign]]:
-    * stream ≡ batch because the fold is a pure function of the row),
-    * and q289's representative-keyed variant. Docs need (doc_id, lang).
+  /** The row-local assignment core — shared by q288 and q289's
+    * representative-keyed variant (the fold is a pure function of the
+    * row). Docs need (doc_id, lang).
     */
   private[graft] def assignSplits(docs: DataFrame): DataFrame =
     docs

@@ -8,50 +8,23 @@ import org.apache.spark.sql.functions._
   * The key property is DETERMINISM BY CONTENT, not by execution:
   * `rand()`-based sampling changes under task retry, partition count,
   * or re-run, which silently leaks test rows into a future training
-  * set. [[trainTestSplit]] assigns each row by hashing its ID with a
-  * seed, so the assignment is a pure function of (id, seed) — stable
+  * set. Every helper here decides each row by hashing its id or
+  * content, so the decision is a pure function of (id, seed) — stable
   * across runs, clusters, and data additions (new rows never move old
-  * rows between splits; the property held by every published
-  * hash-based splitting scheme).
-  *
-  * [[stratified]] wraps `sampleBy` (per-stratum Bernoulli sampling)
-  * for proportion control where exact reproducibility per row matters
-  * less than per-class balance.
+  * rows between samples or splits).
   */
 object Sampling {
-
-  /** Deterministic train/test split by id hash: a row lands in test
-    * iff `pmod(xxhash64(id, seed), granularity) < testFraction ·
-    * granularity`. Returns (train, test) — provably disjoint and
-    * complete (same predicate, negated).
-    */
-  def trainTestSplit(df: DataFrame, idCol: String, testFraction: Double,
-      seed: Long = 42L, granularity: Long = 1000000L): (DataFrame, DataFrame) = {
-    require(testFraction >= 0.0 && testFraction <= 1.0,
-      s"testFraction must be in [0,1], got $testFraction")
-    val cut = (testFraction * granularity).toLong
-    val bucket = pmod(xxhash64(col(idCol), lit(seed)), lit(granularity))
-    (df.filter(bucket >= cut), df.filter(bucket < cut))
-  }
-
-  /** Per-stratum sampling: keep ~`fractions(stratum)` of each
-    * stratum's rows (seeded Bernoulli per row). Strata missing from
-    * the map are dropped — the curation "keep-list with quotas" shape.
-    */
-  def stratified(df: DataFrame, stratumCol: String,
-      fractions: Map[String, Double], seed: Long = 42L): DataFrame =
-    df.stat.sampleBy(stratumCol, fractions, seed)
 
   /** DETERMINISTIC stratified sampling in the md5 family: keep a row
     * iff the first two hex digits of `md5(seed || '|' || id)` fall
     * below the stratum's cut, where `fractions` gives each stratum's
     * keep-rate in 256ths (two hex digits ⇒ 1/256 granularity). Unlike
-    * [[stratified]] (Spark's seeded `sampleBy`, whose RNG stream is
-    * engine- and partitioning-specific), the decision is a pure
-    * function of (id, seed) — reproducible across engines, retries,
-    * and repartitioning, and portable to any system with md5 (the
-    * repo's oracle-hash contract). Strata missing from the map drop
-    * (quota keep-list semantics, matching [[stratified]]). Per-row
+    * Spark's seeded `sampleBy`, whose RNG stream is engine- and
+    * partitioning-specific, the decision is a pure function of
+    * (id, seed) — reproducible across engines, retries, and
+    * repartitioning, and portable to any system with md5 (the repo's
+    * oracle-hash contract). Strata missing from the map drop (quota
+    * keep-list semantics). Per-row
     * work is one md5 + a string compare — codegen'd, no shuffle.
     */
   def stratifiedByHash(df: DataFrame, stratumCol: String, idCol: String,
@@ -67,9 +40,7 @@ object Sampling {
   }
 
   /** Deterministic per-stratum RANKING hash for fixed-size sampling
-    * (q104 and its streaming twin share this single definition — the
-    * batch/streaming bit-for-bit agreement is structural, not
-    * copy-paste): the first 5 hex chars (20 bits) of
+    * (q104): the first 5 hex chars (20 bits) of
     * `md5('k42|' || id)` as a long. 20 bits is deliberate:
     * [[graft.plans.TopK.topKPerKey]] orders by a DOUBLE ord, so the
     * q104 packing `h·2³² + id` must stay below 2⁵³ to remain exactly

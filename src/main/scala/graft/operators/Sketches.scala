@@ -3,28 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sketch-based approximate operators — the 100 TB counterparts of the
-  * exact oracle-gated forms. Exact answers (q11 distinct counts, q34
-  * percentiles) need full shuffles or sorts; these bound memory and
-  * shuffle at a declared error:
+/** Sketch-based approximate operators. Bloom-filter semi-join pruning:
+  * filter the BIG side before its shuffle with a compact membership
+  * sketch of the small side's keys. No false negatives — never drops a
+  * real match; false positives only cost wasted shuffle rows at rate
+  * `fpp`. (Spark's own runtime bloom join filters — conf
+  * `spark.sql.optimizer.runtime.bloomFilter.enabled` — are the
+  * declarative form; this utility is the explicit handle.)
   *
-  *  - HyperLogLog++ distinct counts (`approx_count_distinct`): fixed
-  *    sketch size per group, mergeable partial aggregation.
-  *  - GK/relative-error quantiles (`percentile_approx`): bounded
-  *    buffer, no per-group sort.
-  *  - Count-min heavy hitters: sublinear frequency sketch, driver-side
-  *    merge (the sketch, not the data, is collected).
-  *  - Bloom-filter semi-join pruning: filter the BIG side before its
-  *    shuffle with a compact membership sketch of the small side's
-  *    keys. No false negatives — never drops a real match; false
-  *    positives only cost wasted shuffle rows at rate `fpp`. (Spark's
-  *    own runtime bloom join filters — conf
-  *    `spark.sql.optimizer.runtime.bloomFilter.enabled` — are the
-  *    declarative form; this utility is the explicit handle.)
-  *
-  * None are DuckDB-oracle-gated (sketch internals differ across
-  * engines); each is spec-gated against its exact counterpart with the
-  * sketch's own error bound.
+  * Sketch internals differ across engines, so the sketch itself is
+  * spec-gated against its exact counterpart; the queries that prune
+  * through it (q143) stay oracle-exact because pruning never drops a
+  * match.
   */
 object Sketches {
 
@@ -45,74 +35,6 @@ object Sketches {
       if (hit != null) hit
       else { val o = new Object; bloomCapLocks.put(s, o); o }
     }
-
-  /** Approximate distinct values of `valueCol` per `keyCol`
-    * (HyperLogLog++, default rsd 5%).
-    */
-  def approxDistinctPerKey(df: DataFrame, keyCol: String, valueCol: String,
-      rsd: Double = 0.05): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(approx_count_distinct(col(valueCol), rsd).as("approx_distinct"))
-
-  /** Approximate percentiles per group (GK sketch; `accuracy` trades
-    * memory for error ≤ 1/accuracy relative rank).
-    */
-  def approxQuantilesPerKey(df: DataFrame, keyCol: String, valueCol: String,
-      probabilities: Seq[Double], accuracy: Int = 10000): DataFrame = {
-    val probsExpr = probabilities.mkString("array(", ", ", ")")
-    df.groupBy(col(keyCol))
-      .agg(expr(s"percentile_approx($valueCol, $probsExpr, $accuracy)").as("quantiles"))
-  }
-
-  /** Estimated frequencies of GIVEN candidate values from a count-min
-    * sketch — the true CMS use case: the sketch is built distributed
-    * (mergeable partial sketches), only the sketch comes to the driver,
-    * and query-time estimation never rescans the data. CMS never
-    * underestimates, so estimates ≥ true counts always.
-    *
-    * Candidates are probed with the COLUMN'S NATIVE type: CMS hashes
-    * integral types and strings differently, so probing a long column
-    * with stringified values would return garbage.
-    */
-  def estimateCounts(df: DataFrame, valueCol: String, candidates: Seq[Any],
-      eps: Double = 0.001, confidence: Double = 0.99, seed: Int = 42): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val integral = df.schema(valueCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case StringType => false
-      case other => throw new IllegalArgumentException(
-        s"estimateCounts supports integral and string columns, got $other")
-    }
-    val cms = df.stat.countMinSketch(valueCol, eps, confidence, seed)
-    candidates.map { c =>
-      val est =
-        if (integral) cms.estimateCount(java.lang.Long.valueOf(c.toString))
-        else cms.estimateCount(c.toString)
-      (c.toString, est)
-    }.toSeq.toDF(valueCol, "est_count")
-  }
-
-  /** Heavy hitters: candidate values (a bounded distinct pass — capped
-    * at `maxCandidates`, because CMS cannot enumerate and an unbounded
-    * distinct-collect would defeat the sketch's sublinearity) whose CMS
-    * estimate clears `minCount`. No true heavy hitter is missed: CMS
-    * only overestimates. For columns with cardinality beyond
-    * `maxCandidates`, derive candidates elsewhere (sampling, a known
-    * watch-list) and call [[estimateCounts]] directly.
-    */
-  def heavyHitters(df: DataFrame, valueCol: String, minCount: Long,
-      eps: Double = 0.001, confidence: Double = 0.99, seed: Int = 42,
-      maxCandidates: Int = 100000): DataFrame = {
-    val distinctVals = df.select(col(valueCol)).distinct()
-      .limit(maxCandidates + 1).collect().map(_.get(0))
-    require(distinctVals.length <= maxCandidates,
-      s"$valueCol has more than $maxCandidates distinct values; " +
-        "supply explicit candidates via estimateCounts instead")
-    estimateCounts(df, valueCol, distinctVals.toSeq, eps, confidence, seed)
-      .filter(col("est_count") >= minCount)
-  }
 
   /** Prune `big` down to rows whose `keyCol` is (probably) present in
     * `small`'s `keyCol` set, using Spark's native bloom expressions:

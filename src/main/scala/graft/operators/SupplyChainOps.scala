@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Query
 import graft.Tables
-import RelationalOps.{exactMoneySum, round6}
+import RelationalOps.exactMoneySum
 
 /** Supply-chain analytics: the six TPC-H query shapes the engine did not
   * yet cover — Q6 (q91), Q12 (q92), Q9 (q93), Q2 (q94), Q11 (q95),

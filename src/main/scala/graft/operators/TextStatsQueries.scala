@@ -313,8 +313,8 @@ object TextStatsQueries {
 
   // ---------------------------------------------------------------- q48
   /** Deterministic content-hash train/test split ([[Sampling.md5Split]],
-    * the oracle-portable md5 twin of the xxhash64 `trainTestSplit`):
-    * split is a pure function of the TEXT BYTES, so re-runs, retries,
+    * oracle-portable md5): the split is a pure function of the TEXT
+    * BYTES, so re-runs, retries,
     * and engine swaps agree row-for-row, and byte-identical duplicates
     * land on the same side (no train/test contamination through dups).
     * 14/16 of the hash space trains.

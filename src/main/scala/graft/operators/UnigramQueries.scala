@@ -82,9 +82,8 @@ object UnigramQueries {
     * its ordered piece-id array (ids = dense ranks over the model's
     * used pieces, count desc / piece asc). Assembled ONCE at
     * vocabulary scale (flatten + broadcast id join — the trainer's own
-    * discipline); this is the deployable artifact both the batch
-    * encode and the streaming twin probe, the q78/imageDedup
-    * state-lives-in-the-artifact pattern. */
+    * discipline); this is the deployable artifact the encode probes,
+    * the q78 state-lives-in-the-artifact pattern. */
   def modelWordIds(m: UnigramLm.Model): DataFrame = {
     // global rank window: bounded input — m.counts' support is the
     // seed vocabulary (≤ MaxSeedPieces + alphabet by construction),
@@ -101,14 +100,13 @@ object UnigramQueries {
       .select(col("word"), expr("transform(ps, p -> p.id)").as("wid"))
   }
 
-  /** The encode CORE shared by q269 and the streaming twin (the
-    * bm25Rank/setSimProbe stream ≡ batch-by-shared-code discipline):
-    * documents against a frozen [[modelWordIds]] artifact. Per-doc
+  /** The encode CORE shared by q269 and q279: documents against a
+    * frozen [[modelWordIds]] artifact. Per-doc
     * output is row-local given the artifact — one word-keyed corpus
     * join + one doc_id-keyed reassembly, the only corpus-sized
     * exchanges — so ANY doc-partitioned micro-batch split unions to
     * exactly the batch result. Words absent from the artifact (possible
-    * only for streams — the batch gate encodes the training corpus) are
+    * only for new text — the batch gate encodes the training corpus) are
     * COUNTED in `n_oov` and excluded from the id sequence, never
     * silently dropped. Docs need (doc_id, text). */
   def encodeAgainst(docs: DataFrame, wordIds: DataFrame): DataFrame = {
@@ -671,65 +669,6 @@ object UnigramQueries {
       .orderBy(col("word"))
   }
 
-  /** Per-DOCUMENT segmentation against a frozen vocabulary-score
-    * artifact (the q277 `choices/unigram-vocab/vocab` parquet) — the
-    * SERVING core shared by the batch path and
-    * [[graft.streaming.StreamingOps.streamingVocabSegment]] (the
-    * encodeAgainst/bm25Rank stream ≡ batch-by-shared-code
-    * discipline). This is the deploy shape a persisted SentencePiece-
-    * style vocabulary buys over the word→id table
-    * ([[encodeAgainst]]): an UNSEEN word still segments — single-char
-    * coverage means any word over the trained ALPHABET has a Viterbi
-    * path — so streaming OOV collapses from "word never trained" to
-    * "character never trained". Words containing an unseen character
-    * (no candidate covers that position; the DP would have no path)
-    * are COUNTED per doc in `n_unseg` and excluded from the piece
-    * stream, never silently dropped — the encodeAgainst n_oov
-    * contract one level down.
-    *
-    * Scale shape: the batch's DISTINCT words are segmented once at
-    * vocabulary scale under the broadcast score table (the trainer's
-    * own E-step discipline); the corpus-sized exchanges are one
-    * word-keyed join and one doc_id-keyed reassembly — identical to
-    * encodeAgainst's. The alphabet test is a row-local `translate`
-    * against the artifact's single-char pieces (one bounded driver
-    * collect of ≤|alphabet| rows — the artifact is vocabulary-sized
-    * by construction). Docs need (doc_id, text).
-    */
-  def segmentDocsAgainst(docs: DataFrame, scores: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val alphabet = scores.filter(length(col("piece")) === 1)
-      .collect().map(_.getString(0)).sorted.mkString
-    val toks = docs
-      .select(col("doc_id"), TextPrep.tokensCol(col("text")).as("toks"))
-    val words = toks
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("wpos", "word")))
-    // segmentable ⟺ every char is a trained single (translate strips
-    // the alphabet; any residue is an untrained character)
-    val segmentable = words.select(col("word")).distinct()
-      .filter(length(translate(col("word"), alphabet, "")) === 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-    val wseg = UnigramLm.viterbiSegment(segmentable, scores)
-      .select(col("word"), col("pieces"))
-    val perDoc = words
-      .join(wseg, Seq("word"), "left")
-      .groupBy(col("doc_id"))
-      .agg(
-        sort_array(collect_list(struct(col("wpos"), col("pieces")))).as("ws"),
-        sum(when(col("pieces").isNull, 1L).otherwise(0L)).as("unseg"))
-      .select(col("doc_id"), col("unseg"),
-        expr("flatten(transform(filter(ws, w -> w.pieces is not null), w -> w.pieces))")
-          .as("pieces"))
-    toks.select(col("doc_id"), size(col("toks")).cast("long").as("n_words"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_words"),
-        coalesce(col("unseg"), lit(0L)).as("n_unseg"),
-        size(coalesce(col("pieces"), expr("array()"))).cast("long")
-          .as("n_pieces"),
-        md5(concat_ws("\u0001", coalesce(col("pieces"), expr("array()")))
-          .cast("binary")).as("pieces_hash"))
-  }
-
   // ------------------------------------------------------------ q279
   /** The word→piece-id ENCODING ARTIFACT derived from the PERSISTED
     * vocabulary alone — [[modelWordIds]]'s deploy twin with no trainer
@@ -741,9 +680,8 @@ object UnigramQueries {
     * whole encode are functions of the `choices/unigram-vocab/vocab`
     * parquet and the incoming text — nothing else. Words carrying an
     * untrained character have no Viterbi path and are simply ABSENT
-    * from this table, so [[encodeAgainst]] counts them in `n_oov`
-    * (the segmentDocsAgainst n_unseg contract, surfaced through the
-    * shared encode core). The ranking window is vocabulary-sized
+    * from this table, so [[encodeAgainst]] counts them in `n_oov`.
+    * The ranking window is vocabulary-sized
     * (≤ the chosen size — the q126 class). */
   def vocabWordIds(words: DataFrame, scores: DataFrame): DataFrame = {
     val ids = scores
@@ -768,7 +706,7 @@ object UnigramQueries {
     * deploy twin and the last verb of the persisted-tokenizer story
     * (train → choose → persist → segment → ENCODE, every serving step
     * off the artifact): ensure the q277 choice is warm, then run the
-    * SAME [[encodeAgainst]] core q269 and the streaming twin use,
+    * SAME [[encodeAgainst]] core q269 uses,
     * against [[vocabWordIds]] built from the artifact's scores. The
     * gated rows carry the chosen size AND the corpus stamp; the
     * oracle recomputes stamp, training, sweep, rule, id ranking, and

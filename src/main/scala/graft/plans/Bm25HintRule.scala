@@ -10,8 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL surface for Okapi BM25 ranked retrieval
   * ([[graft.operators.Round14Queries.bm25Rank]] — the same scoring
-  * core the Scala q226, the multi-query q244, and the streaming
-  * incremental index share):
+  * core the Scala q226 and the multi-query q244 share):
   *
   * {{{
   *   SELECT doc_id, bm25, n_terms_hit FROM (

@@ -32,15 +32,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * full DuckDB oracle gate.
   */
 object ParallelCheckpoint {
-  /** Eager localCheckpoint at ≥ default parallelism (escape hatch for
-    * A/B measurement: `spark.graft.checkpoint.parallel=false` keeps
-    * the plain checkpoint). */
+  /** Eager localCheckpoint at ≥ default parallelism. */
   def apply(df: DataFrame): DataFrame = {
     val ckpt = df.localCheckpoint()
-    val spark = df.sparkSession
-    if (!spark.conf.getOption("spark.graft.checkpoint.parallel")
-        .forall(_.toBoolean)) return ckpt
-    val cores = spark.sparkContext.defaultParallelism
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     if (ckpt.rdd.getNumPartitions < cores) {
       val wide = ckpt.repartition(cores).localCheckpoint()
       release(ckpt) // the eager re-checkpoint no longer reads it

@@ -57,7 +57,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     *
     * Actions run while the plan is built (the returned scoring plan
     * runs when consumed):
-    *  - the vocabulary collect;
+    *  - the right side's vocabulary collect;
     *  - two-sided: the right side's bounded collect, straight from its
     *    grouped aggregate (it is consumed once, by that collect), then
     *    the left side's [[graft.plans.ParallelCheckpoint]];
@@ -74,7 +74,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // self-join: two structurally identical but distinct frames build
     // twice, correct but 2× work, never a wrong answer
     val selfJoin = left eq right
-    val words = collectVocab(left, right, selfJoin, maxDenseVocab)
+    val words = collectVocab(right, maxDenseVocab)
     require(words.length <= maxDenseVocab,
       s"denseArgmax: vocabulary exceeds maxDenseVocab=$maxDenseVocab — " +
         "use the inverted-index strategy (argmaxAdaptive) for large vocabularies")
@@ -87,18 +87,18 @@ object Similarity extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** The sorted distinct vocabulary of both sides, collected through
-    * limit(maxDenseVocab+1) (TakeOrderedAndProject — one action, driver
-    * memory capped at maxDenseVocab+1 words). More than maxDenseVocab
-    * words back means the vocabulary is over the bound; at most
-    * maxDenseVocab means the limit was a no-op and the array is the
-    * complete vocabulary. */
-  private def collectVocab(left: DataFrame, right: DataFrame, selfJoin: Boolean,
-      maxDenseVocab: Long): Array[String] = {
-    val wordSrc = if (selfJoin) left.select(col("word"))
-      else left.select(col("word")).unionAll(right.select(col("word")))
+  /** The sorted distinct vocabulary of the RIGHT side, collected
+    * through limit(maxDenseVocab+1) (TakeOrderedAndProject — one action,
+    * driver memory capped at maxDenseVocab+1 words). More than
+    * maxDenseVocab words back means the vocabulary is over the bound;
+    * at most maxDenseVocab means the limit was a no-op and the array is
+    * the complete vocabulary. A word only the left side holds can never
+    * add to a dot product, so it takes no dimension: the left side's
+    * vocabulary join drops it, and a left row whose words are all
+    * left-only gets no match, exactly as in the inverted join. */
+  private def collectVocab(right: DataFrame, maxDenseVocab: Long): Array[String] = {
     val limitN = (maxDenseVocab + 1).min(Int.MaxValue.toLong).toInt
-    wordSrc.distinct().orderBy(col("word")).limit(limitN)
+    right.select(col("word")).distinct().orderBy(col("word")).limit(limitN)
       .collect().map(_.getString(0))
   }
 
@@ -290,17 +290,16 @@ object Similarity extends org.apache.spark.internal.Logging {
     * to LSH past a size threshold would change RESULTS, so the
     * approximate regime is an API-level opt-in (`exact = false`), and
     * exact mode skips the estimate job entirely (no wasted pass on the
-    * path that cannot act on it). `maxPairRows < 0` (default) reads
-    * `graft.similarity.maxPairRows` (fallback 2e9 — ~hundreds of GB of
-    * pair traffic, the scale where SCALE.md's measurements say the
-    * inverted join stops being answerable).
+    * path that cannot act on it). `maxPairRows` defaults to 2e9 —
+    * ~hundreds of GB of pair traffic, the scale where SCALE.md's
+    * measurements say the inverted join stops being answerable.
     *
     * The dense candidate needs INTEGRAL ids (the dense scorer casts to
     * long and tie-breaks numerically — fractional ids would truncate);
     * other ids go to the inverted join with no job at all. Its actions,
     * in order, all while the plan is built:
-    *  1. the vocabulary collect (limit maxDenseVocab+1); over the bound
-    *     ⇒ fall back;
+    *  1. the right side's vocabulary collect (limit maxDenseVocab+1);
+    *     over the bound ⇒ fall back;
     *  2. two-sided: the right side's collect (limit maxRows+1, maxRows =
     *     maxDenseBytes / (dim × 8 B)) straight from its grouped
     *     aggregate; truncated ⇒ fall back;
@@ -318,7 +317,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   def argmaxAdaptive(left: DataFrame, right: DataFrame,
       excludeSelf: Boolean = false, maxDenseVocab: Long = 2048,
       maxDenseBytes: Long = 64L << 20, exact: Boolean = true,
-      maxPairRows: Long = -1L): DataFrame = {
+      maxPairRows: Long = 2_000_000_000L): DataFrame = {
     import org.apache.spark.sql.types._
     val integralIds = Seq(left, right).forall(_.schema("id").dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
@@ -329,22 +328,18 @@ object Similarity extends org.apache.spark.internal.Logging {
     val dense: Option[Either[String, DataFrame]] =
       if (!integralIds) None
       else Some {
-        val words = collectVocab(left, right, selfJoin, maxDenseVocab)
+        val words = collectVocab(right, maxDenseVocab)
         if (words.length > maxDenseVocab)
           Left(s"site=vocabulary dim>$maxDenseVocab (maxDenseVocab=$maxDenseVocab)")
         else denseScore(left, right, excludeSelf, selfJoin, words, maxDenseBytes)
           .left.map(maxRows => s"site=bytes dim=${words.length} " +
             s"rowsSeen=${maxRows + 1} maxRows=$maxRows (maxDenseBytes=$maxDenseBytes)")
       }
-    val budget =
-      if (maxPairRows >= 0) maxPairRows
-      else left.sparkSession.conf.getOption("graft.similarity.maxPairRows")
-        .map(_.toLong).getOrElse(2_000_000_000L)
     val strategy = chooseArgmaxStrategy(
       denseEligible = dense.exists(_.isRight),
       exact = exact,
       pairRows = estimateInvertedPairRows(left, right, selfJoin),
-      maxPairRows = budget)
+      maxPairRows = maxPairRows)
     dense.foreach(_.left.foreach(gate =>
       logWarning(s"argmaxAdaptive: dense candidate fell back: $gate strategy=$strategy")))
     strategy match {

@@ -52,13 +52,8 @@ object TextPrep {
     */
   def tokensCol(c: Column): Column = array_remove(split(normalize(c), " "), "")
 
-  /** M2 as an expression: drop stop words from a token array. */
-  def removeStopwords(tokens: Column, stopwords: Seq[String] = DefaultStopwords): Column =
-    array_except(tokens, lit(stopwords.toArray))
-
-  /** Full expression-path prep: text column → filtered token array.
-    * NOTE `array_except` also deduplicates; use [[filteredTokensCol]] when
-    * duplicate tokens must survive (TF counting).
+  /** Full expression-path prep (P9+M1+M2): text column → token array
+    * without stop words; duplicate tokens survive (TF counting).
     */
   def filteredTokensCol(c: Column, stopwords: Seq[String] = DefaultStopwords): Column =
     filter(tokensCol(c), w => !w.isin(stopwords: _*))

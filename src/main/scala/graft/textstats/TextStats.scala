@@ -139,8 +139,8 @@ object TextStats {
   val BpePattern = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
   /** BPE-ish token count of a text column — the ONE definition shared
-    * by [[tokenCounts]], the q88 mixture rollup, and the streaming
-    * twin, so batch/stream token accounting can't silently diverge.
+    * by [[tokenCounts]] and the q88 mixture rollup, so their token
+    * accounting can't silently diverge.
     */
   def bpeCount(textCol: Column): Column =
     regexp_count(textCol, lit(BpePattern)).cast("long")

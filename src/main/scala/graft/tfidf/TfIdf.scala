@@ -12,9 +12,7 @@ import graft.text.TextPrep
   * The vector representation is deliberately the '''long relational form'''
   * `(id, word, weight)` — that is what makes the downstream similarity
   * join scalable (inverted-index equi-join on `word` instead of an O(n²)
-  * cartesian, SURVEY.md §4.3). `map`-typed per-row vectors are available
-  * via [[assembleVectors]] when an API consumer wants them; nothing in the
-  * engine's hot path needs them.
+  * cartesian, SURVEY.md §4.3).
   *
   * Formula (lab2.py:187–189, sklearn-flavored, base-10):
   * {{{ w = (1 + log10(tf)) * (log10((n+1)/(df+1)) + 1) }}}
@@ -100,9 +98,4 @@ object TfIdf {
     val n = df.select(col(idCol)).distinct().count()
     l2Normalize(weights(termFreq(toks), docFreq(toks), n))
   }
-
-  /** A5: long form → one `map<string,double>` vector row per id. */
-  def assembleVectors(longForm: DataFrame): DataFrame =
-    longForm.groupBy(col("id"))
-      .agg(map_from_entries(collect_list(struct(col("word"), col("w")))).as("vec"))
 }

@@ -28,25 +28,6 @@ class AnnSpec extends SparkTestBase {
     selfDots.foreach(d => assert(math.abs(d - 1.0) < 1e-5)) // float32 norm
   }
 
-  test("TopKAgg matches the window-ranking top-k") {
-    VectorFunctions.register(spark)
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    val viaWindow = Ann.bruteForceTopK(queries, emb, k = 5)
-      .select($"qid", $"nid", $"rk").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-
-    val q = queries.select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val c = emb.select($"vec_id".as("nid"), $"embedding".as("nv"))
-    val topk = udaf(new Ann.TopKAgg(5))
-    val viaAgg = c.crossJoin(broadcast(q)).filter($"qid" =!= $"nid")
-      .select($"qid", struct($"nid", round(VectorFunctions.dot($"qv", $"nv"), 6).as("cos")).as("n"))
-      .groupBy($"qid").agg(topk($"n.nid", $"n.cos").as("top"))
-      .select($"qid", posexplode($"top"))
-      .select($"qid", $"col.nid", ($"pos" + 1).cast("long").as("rk")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(viaAgg === viaWindow)
-  }
-
   test("bruteForceTopKViaOperator == window form, and plans through TopKPerKeyExec") {
     val queries = emb.filter($"vec_id" % 100 === 0)
     val viaOp = Ann.bruteForceTopKViaOperator(queries, emb, k = 3)

@@ -2,7 +2,6 @@ package graft.dedup
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.tfidf.TfIdf
 
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -102,17 +101,14 @@ class DedupSpec extends SparkTestBase {
     assert(got.toSeq === Seq((0, "a b"), (1, "b c"), (2, "c d")))
   }
 
-  test("xxhash64 minhash agrees with md5 minhash on jaccard ESTIMATES") {
-    // both families estimate the same jaccard; exact-dup pair must have
-    // identical signatures in both, near-dup mostly-equal
+  test("minhash signatures estimate jaccard: exact dup identical, near dup mostly equal") {
     val toks = Dedup.tokenSets(docs, "doc_id", "text")
-    for (sigDf <- Seq(Dedup.minhashSig(toks, 12), Dedup.minhashSig64(toks, 12))) {
-      val sigs = sigDf.collect().map(r => r.getAs[Any]("id").asInstanceOf[Long] ->
+    val sigs = Dedup.minhashSig(toks, 12).collect()
+      .map(r => r.getAs[Any]("id").asInstanceOf[Long] ->
         (1 until r.length).map(r.get)).toMap
-      assert(sigs(1L) === sigs(2L), "exact dup: identical signature")
-      val agree34 = sigs(3L).zip(sigs(4L)).count { case (a, b) => a == b }
-      assert(agree34 >= 8, s"near dup: most rows agree, got $agree34/12")
-    }
+    assert(sigs(1L) === sigs(2L), "exact dup: identical signature")
+    val agree34 = sigs(3L).zip(sigs(4L)).count { case (a, b) => a == b }
+    assert(agree34 >= 8, s"near dup: most rows agree, got $agree34/12")
   }
 
   test("lshCandidates maxBucket cap drops degenerate buckets") {
@@ -130,20 +126,6 @@ class DedupSpec extends SparkTestBase {
     val short = Seq(Seq("a", "b")).toDF("toks")
       .select(Dedup.shinglesCol($"toks", 3)).head.getSeq[String](0)
     assert(short.isEmpty)
-  }
-
-  test("simhash: exact dups identical; near-dups within small hamming; unrelated far") {
-    val tf = TfIdf.termFreq(TfIdf.tokens(docs, "doc_id", "text", stopwords = Nil))
-    val sh = Dedup.simhash64(tf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(sh(1L), sh(2L)) === 0)
-    assert(ham(sh(3L), sh(4L)) <= 16)
-    assert(ham(sh(3L), sh(5L)) > 16)
-    // column-form hamming agrees with scala bitCount
-    val viaCol = Seq((sh(3L), sh(4L))).toDF("a", "b")
-      .select(Dedup.hamming($"a", $"b")).head.getInt(0)
-    assert(viaCol === ham(sh(3L), sh(4L)))
   }
 
   test("allPairsJaccard exact values") {

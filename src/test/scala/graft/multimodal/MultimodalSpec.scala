@@ -50,26 +50,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(n === 500)
   }
 
-  test("frameSample: videos explode into duration-determined frame rows") {
-    val frames = Multimodal.frameSample(assets.as[Multimodal.MediaAsset], fps = 1.0)
-    val videoIds = assets.filter($"kind" === "video")
-      .select($"asset_id").as[Long].collect().toSet
-    val byAsset = frames.groupByKey(_.asset_id).count().collect().toMap
-    assert(byAsset.keySet === videoIds) // non-videos yield nothing
-    // frame count = max(1, floor(duration_ms / 1000)) at 1 fps
-    val durations = Multimodal.metadataExpr(assets)
-      .filter($"kind" === "video")
-      .select($"asset_id", $"duration_ms").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    byAsset.foreach { case (id, n) =>
-      assert(n === math.max(1L, durations(id) / 1000), s"asset $id")
-    }
-    // frames are ordered, offset-stamped, and blob-free beyond the slice
-    val f = frames.filter(_.asset_id == videoIds.head).collect().sortBy(_.frame_idx)
-    assert(f.head.offset_ms === 0L)
-    assert(f.forall(_.frame_bytes.length <= 32))
-  }
-
   test("ImageIoDecoder: real PNG fixtures decode to known dims and bands") {
     val dir = new java.io.File("src/test/resources/media")
     val d = new Multimodal.ImageIoDecoder()
@@ -137,18 +117,4 @@ class MultimodalSpec extends SparkTestBase {
     }
   }
 
-  test("resizePlan: aspect-preserving fit, never upscales") {
-    val plan = Multimodal.resizePlan(assets, maxW = 640, maxH = 360).collect()
-    assert(plan.nonEmpty)
-    plan.foreach { r =>
-      val (w, h) = (r.getAs[Int]("width"), r.getAs[Int]("height"))
-      val (tw, th) = (r.getAs[Int]("target_w"), r.getAs[Int]("target_h"))
-      val s = r.getAs[Double]("scale")
-      assert(tw <= 640 && th <= 360)
-      assert(s <= 1.0 + 1e-9) // no upscale
-      if (w <= 640 && h <= 360) assert(tw === w && th === h)
-      // aspect preserved within rounding
-      assert(math.abs(tw.toDouble / w - th.toDouble / h) <= 0.05)
-    }
-  }
 }

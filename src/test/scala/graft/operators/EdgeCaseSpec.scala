@@ -185,11 +185,10 @@ class EdgeCaseSpec extends SparkTestBase {
       degLang.filter($"doc_id" <= 2L)) // "" and "   " only
     assert(prof.count() === 0)
     assert(Round16Queries.dsirWeightsFromProfile(prof).count() === 0)
-    // passage probe of token-free docs against a real corpus: zero
-    // rows (no passages → no verdicts), not a division error
-    val occ = Seq(("x", 1L)).toDF("phash", "occ")
-    assert(Round16Queries.passageDedupProbe(
-      degenerate.filter($"doc_id" <= 2L), occ).count() === 0)
+    // passages of token-free docs: zero rows (q257's per-doc rollup
+    // then has no row to divide by zero)
+    assert(Round16Queries.passagesOf(
+      degenerate.filter($"doc_id" <= 2L)).count() === 0)
     // kNN vote tail over an empty neighbor table: zero rows, no
     // div-by-zero majority
     val emptyTop = Seq.empty[(Long, Long)].toDF("qid", "nid")

@@ -253,19 +253,6 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  test("trainTestSplit partitions any random id set exactly") {
-    (1L to 3L).foreach { seed =>
-      val ids = sample(Gen.listOfN(200, Gen.chooseNum(Long.MinValue + 1, Long.MaxValue)), seed)
-        .distinct
-      val df = ids.toDF("id")
-      val (train, test) = Sampling.trainTestSplit(df, "id", 0.3, seed)
-      val trainIds = train.select($"id").collect().map(_.getLong(0)).toSet
-      val testIds = test.select($"id").collect().map(_.getLong(0)).toSet
-      assert((trainIds intersect testIds).isEmpty)
-      assert((trainIds union testIds) === ids.toSet)
-    }
-  }
-
   // --------------------------------------------- round-6 kernel laws
 
   private val blockGridGen: Gen[Map[(Int, Int), Int]] =

@@ -305,4 +305,65 @@ class Round18QueriesSpec extends SparkTestBase {
     assert(builds === 2)
     assert(rows(Round18Queries.cardServe(spark, card)).nonEmpty)
   }
+
+  test("snapshot-cursor postings append: consuming manifest intervals lands on the one-shot build bit-equal; rewrites stay loud") {
+    import spark.implicits._
+    import graft.io.SnapshotStore
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-snapcursor")
+      .toFile.getAbsolutePath
+    val lakeA = s"$tmp/a" // snapshotted lake, index fed by the cursor
+    val lakeB = s"$tmp/b" // the full-state from-scratch reference
+    val lakeDocs = s"$lakeA/documents.parquet"
+    val snaps = s"$lakeA/snapshots"
+    // chronology: base → snap1 → ingest A → snap2 → ingest B → snap3
+    docs.filter($"doc_id" % 4 === 0).write.parquet(lakeDocs)
+    SnapshotStore.record(spark, lakeDocs, snaps)
+    docs.filter($"doc_id" % 4 === 1)
+      .write.mode("append").parquet(lakeDocs)
+    SnapshotStore.record(spark, lakeDocs, snaps)
+    docs.filter($"doc_id" % 4 === 2 || $"doc_id" % 4 === 3)
+      .write.mode("append").parquet(lakeDocs)
+    SnapshotStore.record(spark, lakeDocs, snaps)
+    // index built offline FOR snapshot 1's state (the catch-up never
+    // pays a corpus tokenize): seed a dir with the as-of-1 read and
+    // cold-build there — the consumer then owns that index
+    val base = SnapshotStore.readAsOf(spark, snaps, 1)
+      .select($"doc_id", $"text").localCheckpoint()
+    val lakeBase = s"$tmp/base"
+    base.write.parquet(s"$lakeBase/documents.parquet")
+    Round15Queries.ensureBm25IndexIncremental(spark, lakeBase)
+    // the cursor consumer catches up intervals 1→3 on the base index
+    val idxBase = Round15Queries.bm25IndexPath(lakeBase)
+    val applied = Round18Queries.postingsAppendFromSnapshots(spark, snaps,
+      idxBase, 1, 3)
+    assert(applied === 2, "both non-empty intervals must apply")
+    // reference: one-shot build over the final lake state
+    docs.write.parquet(s"$lakeB/documents.parquet")
+    val mB = Round15Queries.ensureBm25IndexIncremental(spark, lakeB)
+    val idxB = Round15Queries.bm25IndexPath(lakeB)
+    val mA = Round15Queries.bm25IndexRead(spark, idxBase).get
+    assert((mA.docRows, mA.docContent) === ((mB.docRows, mB.docContent)))
+    def table(p: String, sub: String) =
+      spark.read.parquet(s"$p/$sub").collect().map(_.toSeq).toSet
+    for (sub <- Seq("postings", "dl", "df", "stats"))
+      assert(table(idxBase, sub) === table(idxB, sub), sub)
+    // a no-op re-consume applies nothing (the cursor is idempotent at
+    // the interval level: deltas already consumed are not re-readable
+    // as new snapshots — re-running the SAME range would violate the
+    // disjointness contract, so the consumer tracks its position; here
+    // we just confirm an empty range is a no-op)
+    assert(Round18Queries.postingsAppendFromSnapshots(spark, snaps,
+      idxBase, 3, 3) === 0)
+    // a compaction inside the consumed range fails loudly at the
+    // delta read — the non-append-interval law routes to rebuild
+    SnapshotStore.compactWithRetention(spark, lakeDocs, snaps,
+      spark.read.parquet(lakeDocs).filter($"doc_id" % 7 =!= 5))
+    SnapshotStore.record(spark, lakeDocs, snaps)
+    val e = intercept[IllegalArgumentException] {
+      Round18Queries.postingsAppendFromSnapshots(spark, snaps, idxBase, 3, 4)
+    }
+    assert(e.getMessage.contains("spans a rewrite"))
+  }
 }

@@ -8,50 +8,6 @@ class SamplingSpec extends SparkTestBase {
 
   private lazy val docs = graft.Tables.documents(spark, sf001)
 
-  test("train/test split: disjoint, complete, near the requested fraction") {
-    val (train, test) = Sampling.trainTestSplit(docs, "doc_id", 0.2)
-    val n = docs.count()
-    assert(train.count() + test.count() === n)
-    assert(train.join(test, Seq("doc_id"), "inner").count() === 0)
-    val frac = test.count().toDouble / n
-    assert(math.abs(frac - 0.2) <= 0.06, s"test fraction $frac")
-  }
-
-  test("split is deterministic across invocations and stable under data growth") {
-    val (_, test1) = Sampling.trainTestSplit(docs, "doc_id", 0.2)
-    val (_, test2) = Sampling.trainTestSplit(docs, "doc_id", 0.2)
-    val ids1 = test1.select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids1 === test2.select($"doc_id").collect().map(_.getLong(0)).toSet)
-    // growth stability: splitting a SUBSET assigns the shared rows
-    // identically (no dependence on what else is in the table)
-    val (_, testSub) = Sampling.trainTestSplit(docs.filter($"doc_id" < 250), "doc_id", 0.2)
-    val subIds = testSub.select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(subIds === ids1.filter(_ < 250))
-  }
-
-  test("different seeds give different splits") {
-    val (_, a) = Sampling.trainTestSplit(docs, "doc_id", 0.2, seed = 1L)
-    val (_, b) = Sampling.trainTestSplit(docs, "doc_id", 0.2, seed = 2L)
-    val idsA = a.select($"doc_id").collect().map(_.getLong(0)).toSet
-    val idsB = b.select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(idsA !== idsB)
-  }
-
-  test("stratified sampling respects per-stratum fractions; unlisted strata dropped") {
-    val byLang = docs.groupBy($"lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val twoLangs = byLang.keys.toSeq.sorted.take(2)
-    val fractions = Map(twoLangs.head -> 0.5, twoLangs(1) -> 0.1)
-    val sampled = Sampling.stratified(docs, "lang", fractions)
-      .groupBy($"lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(sampled.keySet.subsetOf(fractions.keySet)) // others dropped
-    fractions.foreach { case (lang, f) =>
-      val got = sampled.getOrElse(lang, 0L).toDouble / byLang(lang)
-      assert(math.abs(got - f) <= 0.15, s"$lang: wanted ~$f got $got")
-    }
-  }
-
   test("stratifiedByHash: deterministic, per-stratum rates, boundary settings") {
     val fractions = Map("en" -> 128, "de" -> 192, "zh" -> 256)
     val sampled = Sampling.stratifiedByHash(docs, "lang", "doc_id", fractions)

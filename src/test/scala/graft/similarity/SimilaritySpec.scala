@@ -117,7 +117,7 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("two-sided argmaxAdaptive byte bound forces the inverted strategy") {
-    // dim 4 ⇒ maxRows = 40 B / (4 × 8 B) = 1 < 3 abstracts: the bounded
+    // dim 3 ⇒ maxRows = 40 B / (3 × 8 B) = 1 < 3 abstracts: the bounded
     // collect comes back truncated and the call falls back, before the
     // left side is densified
     val (bounded, ran) = graft.JobCounter.during(spark) {
@@ -130,6 +130,22 @@ class SimilaritySpec extends SparkTestBase {
     }.nonEmpty)
     assert(matchSet(bounded) ===
       matchSet(Similarity.argmaxAdaptive(titleVecs, abstractVecs, maxDenseVocab = 10)))
+  }
+
+  test("two-sided dense vocabulary is the right side's: left-only words take no dimension") {
+    // union vocabulary {q, x, y, z} is 4 words, over the bound of 3;
+    // the right side's {x, y, z} is not, so the call stays dense
+    val dense = Similarity.argmaxAdaptive(titleVecs, abstractVecs, maxDenseVocab = 3)
+    assert(dense.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.isEmpty, "expected the dense strategy")
+    val inverted = matchSet(
+      Similarity.argmaxAdaptive(titleVecs, abstractVecs, maxDenseVocab = 0))
+    assert(matchSet(dense) === inverted)
+    assert(matchSet(Similarity.denseArgmax(titleVecs, abstractVecs,
+      maxDenseVocab = 3)) === inverted)
+    // title 3 holds only the left-only word q → no row, as inverted
+    assert(!inverted.exists(_._1 == 3L))
   }
 
   test("chooseArgmaxStrategy: three regimes; dense and exact never run the estimate") {
